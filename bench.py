@@ -151,11 +151,10 @@ def _replay_iters(spark, info: dict, cores: int, iters: int,
                 cfg=EngineConfig(
                     window_length_limit_ms=600_000,
                     num_buckets=max(32, cores),
-                    shuffle_partitions=cores,
                 ),
             )
             s0, t0 = _steal_s(), time.time()
-            stats = eng.replay(collect_group_metrics=False)
+            stats = eng.replay()
             wall = time.time() - t0
             steal = _steal_s() - s0
             results.append(

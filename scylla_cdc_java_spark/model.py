@@ -22,7 +22,7 @@ partition key, ``path`` the clustering key.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -239,7 +239,6 @@ class EngineConfig:
     # + footer-stats window pruning)
     gen_refresh_quiet_ms: int = 10_000
     num_buckets: int = 32  # target-table storage buckets (partition-key hash)
-    shuffle_partitions: int = 32
     salt_buckets: int = 8  # salting fan-out for hot partition keys
     # merge-on-read: compact a bucket once it accumulates this many
     # delta segments (amortized bucket-rewrite cost = 1/compact_threshold
@@ -268,4 +267,3 @@ class EngineConfig:
     # default and the protocol's window shape is preserved.
     max_window_rows: int | None = None
     mode: str = "delta"  # delta | postimage | preimage (Main.java:563-598)
-    extra: dict = field(default_factory=dict)

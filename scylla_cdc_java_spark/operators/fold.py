@@ -9,13 +9,16 @@ make order and redelivery irrelevant (Main.java:124-128). That semantics
 is *monotone*: the final value of every cell/marker/tombstone is a pure
 ``max`` over (timestamp, payload) pairs. So the whole per-key apply loop
 collapses into ONE ``groupBy(pk).agg(max(struct(ts, value)) ...)`` —
-entirely JVM-side, whole-stage-codegen'd, and **skew-immune**: Spark's
-hash aggregate does map-side partial aggregation, so a hot (repo, path)
-key is pre-collapsed per input partition before the shuffle and each
-reducer receives at most #map-partitions pre-aggregated rows per key.
-This is why we deliberately use groupBy+max(struct) instead of a window
-``last(ignorenulls)`` (a window would shuffle ALL rows of the hot key to
-one task). No pandas/Python in this hot path at all.
+entirely JVM-side and **skew-immune**. Struct-typed ``max`` buffers are
+not HashAggregateExec-compatible, so Spark plans a SortAggregate: a
+partial aggregate over each locally sorted input partition, the
+shuffle, then the final aggregate (plans/r06/replay_fold_after.txt). A
+hot (repo, path) key is therefore pre-collapsed per input partition
+before the shuffle and each reducer receives at most #map-partitions
+pre-aggregated rows per key. This is why we deliberately use
+groupBy+max(struct) instead of a window ``last(ignorenulls)`` (a window
+would shuffle ALL rows of the hot key to one task). No pandas/Python in
+this hot path at all.
 
 Three-valued cell semantics (Main.java:143-144) map to:
   written  := value IS NOT NULL OR cdc$deleted_<col>
@@ -116,7 +119,7 @@ def _fold_collections(keyed: DataFrame, pk: list[str],
     (reference: UnpreparedUpdateOp, replicator Main.java:203-276),
     entirely JVM-side: EXPLODE each row's element writes (map entries)
     and element removals (``cdc$deleted_elements_<c>`` keys, folded as
-    NULL-valued cells), hash-group per (pk, element key) for the winning
+    NULL-valued cells), group per (pk, element key) for the winning
     (ts, value, ttl), then regroup to one ``map<elem, struct<v,ts,ttl>>``
     per key. A whole-collection overwrite (``cdc$deleted_<c>`` true, or
     any postimage row) contributes a collection tombstone at ts-1 — the
@@ -124,9 +127,9 @@ def _fold_collections(keyed: DataFrame, pk: list[str],
     survive their own overwrite.
 
     Returns one row per touched pk: the folded map + ``_ctomb_<c>`` per
-    collection column. Skew posture: the element fold is a hash
-    aggregate on (pk, elem) — map-side partial agg collapses hot keys
-    exactly like the scalar fold."""
+    collection column. Skew posture: the element fold is an aggregate
+    on (pk, elem) — partial aggregation before the shuffle collapses
+    hot keys exactly like the scalar fold."""
     df = keyed
     for c in coll_cols:
         if c not in df.columns:
@@ -197,79 +200,11 @@ def _fold_collections(keyed: DataFrame, pk: list[str],
     return merged
 
 
-def _fold_keyed_pandas(keyed: DataFrame, pk: list[str], value_cols: list[str],
-                       marker_ops: list[int]) -> DataFrame:
-    """General-path fold: grouped Arrow ``applyInPandas`` replicating the
-    same LWW semantics per key (SURVEY.md section 7 'built-in vs custom':
-    SQL fast path + pandas general path, cross-checked in tests). This is
-    the extension point for types the SQL path can't fold — non-frozen
-    collections with per-element ``cdc$deleted_elements_`` merges
-    (replicator Main.java:203-276) would live here as
-    ``map_concat``-style numpy/pandas merges."""
-    import numpy as np
-    import pandas as pd
-
-    out_ddl = (
-        ", ".join(f"`{c}` string" for c in pk)
-        + ", "
-        + ", ".join(f"`{c}` string" for c in value_cols)
-        + ", "
-        + ", ".join(f"`_ts_{c}` long" for c in value_cols)
-        + ", "
-        + ", ".join(f"`_ttl_{c}` long" for c in value_cols)
-        + f", `{COL_MARKER_TS}` long, `{COL_MARKER_TTL}` long, `_row_tomb` long"
-    )
-    m_ops = set(marker_ops)
-
-    def _fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf[COL_TS].to_numpy()
-        op = pdf[COL_OP].to_numpy()
-        ttl = pdf[COL_TTL]
-        res: dict = {c: pdf.iloc[0][c] for c in pk}
-
-        def _ttl_at(i: int):
-            t = ttl.iloc[i]
-            return None if pd.isna(t) else int(t)
-
-        is_marker = np.isin(op, list(m_ops))
-        if is_marker.any():
-            idxs = np.flatnonzero(is_marker)
-            win = idxs[int(np.argmax(ts[is_marker]))]
-            res[COL_MARKER_TS] = int(ts[win])
-            res[COL_MARKER_TTL] = _ttl_at(win)
-        else:
-            res[COL_MARKER_TS] = None
-            res[COL_MARKER_TTL] = None
-        is_del = op == OP_ROW_DELETE
-        res["_row_tomb"] = int(ts[is_del].max()) if is_del.any() else None
-        for c in value_cols:
-            v = pdf[c]
-            d = pdf[deleted_col(c)].fillna(False).to_numpy(dtype=bool)
-            written = (~v.isna().to_numpy()) | d
-            written &= ~is_del
-            if written.any():
-                wts = ts[written]
-                i = int(np.argmax(wts))
-                idxs = np.flatnonzero(written)
-                win = idxs[i]
-                res[c] = None if d[win] else v.iloc[win]
-                res[f"_ts_{c}"] = int(ts[win])
-                res[f"_ttl_{c}"] = _ttl_at(win)
-            else:
-                res[c] = None
-                res[f"_ts_{c}"] = None
-                res[f"_ttl_{c}"] = None
-        return pd.DataFrame([res])
-
-    return keyed.groupBy(*pk).applyInPandas(_fold, schema=out_ddl)
-
-
 def fold_batch(
     log_df: DataFrame,
     table: TableConfig,
     pending_range_starts: list[dict] | None = None,
     mode: str = "delta",
-    impl: str = "sql",
     pending_range_ends: list[dict] | None = None,
 ) -> FoldResult:
     """Fold a normalized log slice (must already carry ``cdc$ts``).
@@ -330,49 +265,46 @@ def fold_batch(
                 ),
             )
 
-    if impl == "pandas":
-        key_state = _fold_keyed_pandas(keyed, pk, value_cols, marker_ops)
-    else:
-        aggs = _cell_aggs(table, value_cols)
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(COL_OP).isin(marker_ops),
-                    F.struct(F.col(COL_TS).alias("ts"),
-                             F.col(COL_TTL).alias("ttl")),
-                )
-            ).alias("__marker")
-        )
-        aggs.append(
-            F.max(F.when(F.col(COL_OP) == OP_ROW_DELETE, F.col(COL_TS))).alias(
-                "_row_tomb"
+    aggs = _cell_aggs(table, value_cols)
+    aggs.append(
+        F.max(
+            F.when(
+                F.col(COL_OP).isin(marker_ops),
+                F.struct(F.col(COL_TS).alias("ts"),
+                         F.col(COL_TTL).alias("ttl")),
             )
+        ).alias("__marker")
+    )
+    aggs.append(
+        F.max(F.when(F.col(COL_OP) == OP_ROW_DELETE, F.col(COL_TS))).alias(
+            "_row_tomb"
         )
-        # leading xxhash64 group column: functionally dependent on pk,
-        # so the group set (and every aggregate) is unchanged — but the
-        # SortAggregate this plan lowers to (struct-typed max buffers
-        # are not HashAggregateExec-compatible) now sorts on an int64
-        # radix-sortable prefix instead of comparing common-prefix
-        # string keys row by row (measured ~13% off the fold stage on
-        # the 16M-event bench window)
+    )
+    # leading xxhash64 group column: functionally dependent on pk,
+    # so the group set (and every aggregate) is unchanged — but the
+    # SortAggregate this plan lowers to (struct-typed max buffers
+    # are not HashAggregateExec-compatible) now sorts on an int64
+    # radix-sortable prefix instead of comparing common-prefix
+    # string keys row by row (measured ~13% off the fold stage on
+    # the 16M-event bench window)
+    key_state = (
+        keyed.withColumn("_gh", F.xxhash64(*[F.col(c) for c in pk]))
+        .groupBy("_gh", *pk)
+        .agg(*aggs)
+        .drop("_gh")
+    )
+    # flatten cells into (value, _ts_<c>, _ttl_<c>) triples
+    for c in value_cols:
         key_state = (
-            keyed.withColumn("_gh", F.xxhash64(*[F.col(c) for c in pk]))
-            .groupBy("_gh", *pk)
-            .agg(*aggs)
-            .drop("_gh")
+            key_state.withColumn(c, F.col(f"__cell_{c}.v"))
+            .withColumn(f"_ts_{c}", F.col(f"__cell_{c}.ts"))
+            .withColumn(f"_ttl_{c}", F.col(f"__cell_{c}.ttl"))
         )
-        # flatten cells into (value, _ts_<c>, _ttl_<c>) triples
-        for c in value_cols:
-            key_state = (
-                key_state.withColumn(c, F.col(f"__cell_{c}.v"))
-                .withColumn(f"_ts_{c}", F.col(f"__cell_{c}.ts"))
-                .withColumn(f"_ttl_{c}", F.col(f"__cell_{c}.ttl"))
-            )
-        key_state = (
-            key_state.withColumn(COL_MARKER_TS, F.col("__marker.ts"))
-            .withColumn(COL_MARKER_TTL, F.col("__marker.ttl"))
-            .drop("__marker", *[f"__cell_{c}" for c in value_cols])
-        )
+    key_state = (
+        key_state.withColumn(COL_MARKER_TS, F.col("__marker.ts"))
+        .withColumn(COL_MARKER_TTL, F.col("__marker.ttl"))
+        .drop("__marker", *[f"__cell_{c}" for c in value_cols])
+    )
 
     if coll_cols:
         colls = _fold_collections(

@@ -153,21 +153,6 @@ NEG_INF = -1
 BUCKET_COL = "__bucket"
 
 
-def _phase_marker(t0: float):
-    """Env-gated merge-phase timer (CDC_MERGE_DEBUG=1): prints elapsed
-    time between phases for bench forensics; no-op otherwise."""
-    if not os.environ.get("CDC_MERGE_DEBUG"):
-        return lambda label: None
-    last = [t0]
-
-    def mark(label: str) -> None:
-        now = time.time()
-        print(f"  [merge] {label}: {now - last[0]:.2f}s", flush=True)
-        last[0] = now
-
-    return mark
-
-
 def _empty_cells():
     return F.map_from_arrays(
         F.array().cast("array<string>"),
@@ -1492,7 +1477,6 @@ class ParquetMergeSink:
                        checkpoint: dict | None = None,
                        shard: str | None = None) -> dict:
         t0 = time.time()
-        _mark = _phase_marker(t0)
         root = self._load_root()
         # pin the routing this attempt stages with: the commit-time
         # fence compares the then-current root against THIS count
@@ -1625,7 +1609,6 @@ class ParquetMergeSink:
             for f in futs:
                 f.result()
         self.spark.sparkContext.setJobDescription(None)
-        _mark("delta+tombstone write")
 
         def _staged(stage_dir: str, rel: str) -> dict[str, str]:
             out = {}
@@ -1790,7 +1773,6 @@ class ParquetMergeSink:
                 stats["minor_compacted_buckets"] = mstats["compacted"]
                 stats["minor_compact_s"] = mstats["compact_s"]
             stats["merge_s"] = time.time() - t0
-        _mark("commit+compact")
         return stats
 
     def _over_threshold(self, index: dict) -> list[int]:

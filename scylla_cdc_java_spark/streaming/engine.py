@@ -18,14 +18,16 @@ Roles, mapped:
 
 Exactly-once (SURVEY.md section 7 rule 3): windows are deterministic,
 the apply is idempotent (monotone LWW), and the checkpoint — generation
-index, per-group last ``cdc$time`` + rows applied, pending range starts —
+index, per-group generation + last ``cdc$time``, pending range starts —
 commits atomically WITH the data in the sink manifest. A failed batch is
 simply re-run from the previous manifest (the reference re-reads a failed
 window and relies on LWW the same way, Worker.java:105-114).
 
-Tail mode re-creates the adaptive poll backoff (1s cropped / 10s busy /
-30s idle, Worker.java:28-30,130) and the late-writes watermark via an
-injected clock.
+Replay and tail drive ONE window step (``Engine._step``), as the
+reference runs one window loop for catch-up and live tail. Tail mode
+adds the adaptive poll backoff (1s cropped / 10s busy / 30s idle,
+Worker.java:28-30,130), the generation-age guard and a per-step log
+re-list, and never closes the open generation; the clock is injected.
 """
 
 from __future__ import annotations
@@ -70,45 +72,6 @@ class ReplayStats:
     @property
     def events_per_sec(self) -> float:
         return self.rows / self.wall_s if self.wall_s > 0 else 0.0
-
-
-def _log_layout(log_dir: str, min_generation: int | None = None
-                ) -> dict[int, dict]:
-    """Driver-side partition-dir listing: per generation, the stream
-    groups present, the max time bucket, and the exact max event ms from
-    PARQUET FOOTER STATISTICS of the last bucket's files. Pure metadata
-    — no Spark job (the reference's equivalent driver reads are S1/S2;
-    at lake scale this role belongs to the table-format metadata
-    service, e.g. Iceberg manifests' per-file column bounds). The exact
-    bound lets replay close a generation at its true last event instead
-    of padding the tail with up to time_bucket/window_cap empty
-    microbatch windows.
-
-    ``min_generation`` makes the listing incremental on resume: fully
-    drained generations (below the checkpoint) are skipped entirely —
-    a long-lived log's dead history costs no directory walks."""
-    out: dict[int, dict] = {}
-    for gdir in glob.glob(os.path.join(glob.escape(log_dir), "generation=*")):
-        g = int(gdir.rsplit("=", 1)[1])
-        if min_generation is not None and g < min_generation:
-            out[g] = {"groups": [], "max_time_bucket": 0, "max_ms": None,
-                      "skipped_listing": True}
-            continue
-        groups = set()
-        max_tb = -1
-        tb_dirs: dict[int, list[str]] = {}
-        for sgdir in glob.glob(os.path.join(glob.escape(gdir), "stream_group=*")):
-            groups.add(int(sgdir.rsplit("=", 1)[1]))
-            for tbdir in glob.glob(os.path.join(glob.escape(sgdir), "time_bucket=*")):
-                tb = int(tbdir.rsplit("=", 1)[1])
-                max_tb = max(max_tb, tb)
-                tb_dirs.setdefault(tb, []).append(tbdir)
-        out[g] = {
-            "groups": sorted(groups),
-            "max_time_bucket": max(max_tb, 0),
-            "max_ms": _footer_max_ms(tb_dirs.get(max_tb, ())),
-        }
-    return out
 
 
 def _files_ms_bounds(files) -> tuple[int, int] | None:
@@ -216,6 +179,52 @@ def _footer_max_ms(dirs) -> int | None:
     return best
 
 
+def make_sink(spark: SparkSession, target_path: str, table: TableConfig,
+              cfg: EngineConfig) -> ParquetMergeSink:
+    """The merge sink an ``EngineConfig`` describes — the one
+    constructor ``Engine`` and ``StructuredTail`` share, so no sink
+    setting is honored on one consumption surface and dropped on the
+    other."""
+    return ParquetMergeSink(
+        spark,
+        target_path,
+        table,
+        num_buckets=cfg.num_buckets,
+        salt_buckets=cfg.salt_buckets,
+        compact_threshold=cfg.compact_threshold,
+        minor_compact_ratio=cfg.minor_compact_ratio,
+        bloom_columns=(list(cfg.bloom_columns)
+                       if cfg.bloom_columns is not None else None),
+    )
+
+
+def apply_slice(sink: ParquetMergeSink, table: TableConfig, mode: str,
+                slice_df: DataFrame, ckpt: dict, new_ckpt: dict,
+                shard: str | None = None) -> tuple[dict, int]:
+    """fold -> preimage check -> merge of one normalized log slice, the
+    apply every consumption surface runs (replay, tail and
+    StructuredTail). The fold resumes the range-delete pairing from the
+    pending bounds in ``ckpt`` — unclosed starts (the reference's
+    RangeTombstoneState, Main.java:491-531) and orphan ends (possible
+    only under out-of-order streaming delivery). ``merge()`` commits
+    ``new_ckpt`` with the data and fills its pending keys from the
+    tombstone sidecar unless the caller pinned them. Returns the merge
+    stats and the op-0 mismatch count (``mode="preimage"`` only)."""
+    starts, ends = (
+        [{**p, "stream_id": bytes.fromhex(p["stream_id"])}
+         for p in ckpt.get(k, [])]
+        for k in ("pending_ranges", "pending_ends")
+    )
+    fold = fold_batch(slice_df, table, starts, mode=mode,
+                      pending_range_ends=ends)
+    mismatches = 0
+    if mode == "preimage":
+        from ..operators.preimage import verify_preimages
+
+        mismatches = verify_preimages(sink, table, slice_df, fold)
+    return sink.merge(fold, new_ckpt, shard=shard), mismatches
+
+
 class Engine:
     """``Engine(spark, log_dir, generations_path, target_path).replay()``
     — the public surface mirroring ``new ScyllaCDC(...); fetchChanges();
@@ -266,6 +275,12 @@ class Engine:
         # exactly where it lives. k engines with residues 0..k-1 are
         # key-disjoint and their targets union to the full table.
         self.group_salt = dict(group_salt) if group_salt else {}
+        # The stream groups this engine reads, whole or salted; None =
+        # unsharded (every group). The one ownership set behind the
+        # scan predicate, the footer-stats globs and the lineage stamp.
+        self._owned = (
+            None if self.stream_groups is None and not self.group_salt
+            else set(self.stream_groups or []) | set(self.group_salt))
         # Multi-writer shared target: several sharded Engines (disjoint
         # stream_groups / group_salt residues) may consume into ONE
         # table concurrently — commits serialize via the sink's
@@ -286,19 +301,53 @@ class Engine:
         self._file_stats_cache: dict = {}
         self._gens_cache: list | None = None
         self._gens_fetched_ms: int = -(10**18)
-        self.sink = ParquetMergeSink(
-            spark,
-            target_path,
-            table,
-            num_buckets=self.cfg.num_buckets,
-            salt_buckets=self.cfg.salt_buckets,
-            compact_threshold=self.cfg.compact_threshold,
-            minor_compact_ratio=self.cfg.minor_compact_ratio,
-            bloom_columns=(list(self.cfg.bloom_columns)
-                           if self.cfg.bloom_columns is not None else None),
-        )
+        self.sink = make_sink(spark, target_path, table, self.cfg)
 
     # ------------------------------------------------------------------
+    def _group_dirs(self) -> list[str]:
+        """``stream_group=`` dir patterns this engine reads: a sharded
+        engine polling a window whose events live only in foreign
+        groups must see it as empty (checkpoint-only advance), and a
+        SALT-ONLY engine owns slices of exactly the salted groups."""
+        if self._owned is None:
+            return ["stream_group=*"]
+        return [f"stream_group={g}" for g in sorted(self._owned)]
+
+    def _owned_groups(self, gstart: int) -> list[int]:
+        """Owned stream groups present on disk in a generation (one
+        directory listing) — the groups whose checkpoint lineage a
+        window stamps (a sharded consumer must not claim foreign
+        progress)."""
+        try:
+            names = os.listdir(os.path.join(self.log_dir,
+                                            f"generation={gstart}"))
+        except OSError:
+            return []
+        present = (int(d.split("=", 1)[1]) for d in names
+                   if d.startswith("stream_group="))
+        return sorted(g for g in present
+                      if self._owned is None or g in self._owned)
+
+    def _close_ms(self, gstart: int) -> int:
+        """Replay's close bound for the open generation: one past the
+        exact max event ms from PARQUET FOOTER STATISTICS of its last
+        time bucket's files — pure metadata, no Spark job (at lake scale
+        this role belongs to the table-format metadata service, e.g.
+        Iceberg manifests' per-file column bounds). Closing at the true
+        last event instead of the bucket bound saves up to
+        time_bucket/window_cap empty microbatch windows; the bucket
+        bound is the fallback when stats are unusable."""
+        tb_dirs: dict[int, list[str]] = {}
+        for d in glob.glob(os.path.join(
+                glob.escape(self.log_dir), f"generation={gstart}",
+                "stream_group=*", "time_bucket=*")):
+            tb_dirs.setdefault(int(d.rsplit("=", 1)[1]), []).append(d)
+        max_tb = max(tb_dirs, default=0)
+        max_ms = _footer_max_ms(tb_dirs.get(max_tb, ()))
+        if max_ms is not None:
+            return max_ms + 1
+        return (max_tb + 1) * self.time_bucket_ms
+
     def _window_has_data(self, gstart: int, w: FetchingWindow) -> bool:
         """Metadata-only emptiness test for a fetch window: per
         (generation, time_bucket) event-ms bounds from parquet FOOTER
@@ -314,15 +363,7 @@ class Engine:
         if hi_tb - lo_tb > 64:  # huge window (epoch-0 backfill): don't bother
             return True
         base = os.path.join(glob.escape(self.log_dir), f"generation={gstart}")
-        # restrict to OWNED group dirs: a sharded engine polling a
-        # window whose events live only in foreign groups must see it
-        # as empty (checkpoint-only advance), not run an empty
-        # fold+merge per window
-        if self.stream_groups is not None or self.group_salt:
-            mine = set(self.stream_groups or []) | set(self.group_salt)
-            sg_dirs = [f"stream_group={g}" for g in sorted(mine)]
-        else:
-            sg_dirs = ["stream_group=*"]
+        sg_dirs = self._group_dirs()
         for tb in range(lo_tb, hi_tb + 1):
             files = tuple(sorted(
                 f for sg in sg_dirs
@@ -359,18 +400,10 @@ class Engine:
         base = os.path.join(glob.escape(self.log_dir), f"generation={gstart}")
         lo_tb = start_ms // self.time_bucket_ms
         hi_tb = (end_ms - 1) // self.time_bucket_ms
-        # same ownership gate as every other sharding check: a
-        # SALT-ONLY engine (stream_groups None, group_salt set) owns
-        # slices of exactly the salted groups — estimating over ALL
-        # groups would systematically overestimate and over-split
-        # row-capped windows
-        if self.stream_groups is not None or self.group_salt:
-            mine = set(self.stream_groups or []) | set(self.group_salt)
-            sg_dirs = [f"stream_group={g}" for g in sorted(mine)]
-        else:
-            sg_dirs = ["stream_group=*"]
+        # owned groups only: estimating over ALL groups would
+        # systematically overestimate and over-split row-capped windows
         out = []
-        for sg in sg_dirs:
+        for sg in self._group_dirs():
             for tbdir in glob.glob(os.path.join(base, sg, "time_bucket=*")):
                 tb = int(tbdir.rsplit("=", 1)[1])
                 if tb < lo_tb or tb > hi_tb:
@@ -488,7 +521,7 @@ class Engine:
                 & (F.col(COL_TIME_BUCKET) <= end_ms // self.time_bucket_ms)
             )
         )
-        if self.stream_groups is not None or self.group_salt:
+        if self._owned is not None:
             # task-assignment predicate (P2): prunes whole partition
             # dirs for wholly-owned groups; salted (hot) groups scan the
             # group but keep only this shard's keys + all tombstones
@@ -526,231 +559,137 @@ class Engine:
             (F.col(COL_TS) > w.start_ts) & (F.col(COL_TS) <= w.end_ts)
         )
 
-    def _verify_preimages(self, slice_df, fold) -> int:
-        """Shared preimage verification (operators/preimage.py
-        ``verify_preimages``) — one implementation for replay(),
-        _tail_step() AND StructuredTail, so the mode's guarantee cannot
-        silently vanish on any consumption surface."""
-        from ..operators.preimage import verify_preimages
-
-        return verify_preimages(self.sink, self.table, slice_df, fold)
-
     # ------------------------------------------------------------------
-    def replay(self, collect_group_metrics: bool = False) -> ReplayStats:
-        """Consume the whole log to exhaustion (batch replay). Resumes
-        from the sink-manifest checkpoint if one exists.
-
-        ``collect_group_metrics=False`` (default) derives per-window row
-        metrics from the delta segment's parquet footers — the same
-        zero-extra-job path as ``_tail_step`` — so a non-empty window
-        runs exactly TWO Spark jobs (delta write + sidecar write).
-        ``True`` additionally runs a per-window ``groupBy(stream_group)
-        .count()`` job to attribute exact consumed-event counts to each
-        group's checkpoint ``rows_applied`` lineage."""
-        t_start = time.time()
-        stats = ReplayStats()
-        gens = self.generations()
-
-        ckpt = self.sink.checkpoint(shard=self.shard_id) or {
+    def _checkpoint(self) -> dict:
+        """This engine's resume state from the sink manifest, or the
+        fresh-start skeleton: generation index, last consumed
+        ``cdc$ts``, per-group lineage, pending range starts."""
+        return self.sink.checkpoint(shard=self.shard_id) or {
             "gen_index": 0,
             "last_ts": EPOCH_START,
             "groups": {},
             "pending_ranges": [],
             "done": False,
         }
-        if ckpt.get("done"):
-            stats.wall_s = time.time() - t_start
-            return stats
-        # incremental listing: generations below the checkpoint are
-        # drained — skip their directory walks and footer reads
-        resume_gen = (
-            gens[ckpt["gen_index"]][0]
-            if ckpt["gen_index"] < len(gens) else None
-        )
-        layout = _log_layout(self.log_dir, min_generation=resume_gen)
 
+    def _step(self, gens: list, gi: int, ckpt: dict,
+              gen_end_ms: int | None, now_ms: int) -> dict:
+        """One fetch window of generation ``gens[gi]``, resuming from
+        ``ckpt`` — the per-window protocol replay() and tail() both
+        drive (Worker.java:90-133). Plan and crop the window; commit it
+        checkpoint-only when footer stats prove it empty (zero Spark
+        jobs), else read -> fold -> preimage check -> merge with the
+        checkpoint riding the data commit. The modes differ only in
+        the inputs: ``gen_end_ms`` (replay closes the open generation
+        at its footer max, tail never does) and the clock ``now_ms``.
+
+        Returns the window record (``rows`` = applied key-state rows,
+        ``tomb_rows`` = sidecar rows) with the committed checkpoint
+        under ``"ckpt"``. Raises NotReady while the watermark has not
+        passed the window start."""
+        gstart = gens[gi][0]
+        w = self._crop_window_to_rows(gstart, compute_fetching_window(
+            ckpt["last_ts"], gen_end_ms, now_ms, self.cfg))
+        is_last_gen = gi + 1 >= len(gens)
+        # per-group lineage: generation + last_ts onto every owned group
+        # present on disk
+        groups = dict(ckpt.get("groups", {}))
+        for g in self._owned_groups(gstart):
+            groups[str(g)] = {"generation": gstart, "last_ts": w.end_ts}
+        new_ckpt = {
+            # the OPEN (final) generation's close bound is only the
+            # footer max at replay time — the generation can keep
+            # growing. Persist gen_index pointing AT it (done=True
+            # still short-circuits a re-replay), so a later tail()
+            # resumes INSIDE it from last_ts and consumes post-replay
+            # appends (tail reads only generation==gens[gi])
+            "gen_index": gi + 1 if (w.last_window and not is_last_gen)
+            else gi,
+            "last_ts": w.end_ts,
+            "groups": groups,
+            "done": bool(w.last_window and is_last_gen),
+        }
+        if w.last_window:
+            # generation barrier (Worker.java:135-139): pending range
+            # bounds never straddle generations — pin [] so a crash
+            # right after the last window cannot resume with stale
+            # starts injected into the next generation, where a later
+            # END op could mis-pair into a spurious tombstone
+            new_ckpt["pending_ranges"] = []
+            new_ckpt["pending_ends"] = []
+        rec = {"gen": gstart, "start": w.start_ts, "end": w.end_ts,
+               "cropped": w.cropped, "last_window": w.last_window}
+        if not self._window_has_data(gstart, w):
+            # the window provably holds no events: advance lineage with
+            # a manifest-only commit (an empty window cannot close or
+            # open a range, so pending bounds carry over untouched)
+            for k in ("pending_ranges", "pending_ends"):
+                new_ckpt.setdefault(k, ckpt.get(k, []))
+            self.sink.commit_checkpoint(new_ckpt, shard=self.shard_id)
+            return {**rec, "rows": 0, "tomb_rows": 0, "merge_s": 0.0,
+                    "skipped": True, "ckpt": new_ckpt}
+        # One window = one bounded slice (the reference's fetch window
+        # caps memory the same way). Not cached: each consumer re-scans
+        # the parquet with its own opcode/column pushdown (the tombstone
+        # passes touch only ops 4-8 row groups), which measured faster
+        # than materializing the full slice. Pending ranges are left
+        # for merge() to fill from the tombstone sidecar write (one
+        # fewer Spark job per window than collecting here).
+        mstats, mismatches = apply_slice(
+            self.sink, self.table, self.cfg.mode,
+            self._read_window(gstart, w), ckpt, new_ckpt,
+            shard=self.shard_id)
+        # row metrics come from the delta and sidecar parquet footers
+        # (driver-side, no extra Spark job)
+        return {**rec, "rows": mstats.get("delta_rows", 0),
+                "tomb_rows": mstats.get("tomb_rows", 0),
+                "merge_s": mstats.get("merge_s", 0.0),
+                "preimage_mismatches": mismatches, "ckpt": new_ckpt}
+
+    # ------------------------------------------------------------------
+    def replay(self) -> ReplayStats:
+        """Consume the whole log to exhaustion (batch replay). Resumes
+        from the sink-manifest checkpoint if one exists. Per-window row
+        metrics come from the delta and sidecar parquet footers and
+        cost no Spark job of their own."""
+        t_start = time.time()
+        stats = ReplayStats()
+        gens = self.generations()
+        ckpt = self._checkpoint()
         gi = ckpt["gen_index"]
-        last_ts = ckpt["last_ts"]
-        pending = [
-            {**p, "stream_id": bytes.fromhex(p["stream_id"])}
-            for p in ckpt.get("pending_ranges", [])
-        ]
-
-        while gi < len(gens):
-            gstart, streams = gens[gi]
-            lay = layout.get(gstart, {"groups": [], "max_time_bucket": 0})
+        close_ms = None  # the open generation's footer close, read once
+        while not ckpt.get("done") and gi < len(gens):
             if gi + 1 < len(gens):
                 gen_end_ms = gens[gi + 1][0]
             else:
                 # replay mode closes the open generation at log
-                # exhaustion: the exact last-event bound from parquet
-                # footer stats when available (avoids up to
-                # time_bucket/window_cap empty tail windows), else the
-                # conservative bucket bound
-                gen_end_ms = (
-                    lay["max_ms"] + 1
-                    if lay.get("max_ms") is not None
-                    else (lay["max_time_bucket"] + 1) * self.time_bucket_ms
-                )
-            now_ms = (
-                self.clock() if self.clock else gen_end_ms + self.cfg.late_writes_window_ms + 1
-            )
-
-            if _pack_ms_bound(gen_end_ms) <= last_ts:
+                # exhaustion
+                if close_ms is None:
+                    close_ms = self._close_ms(gens[gi][0])
+                gen_end_ms = close_ms
+            if _pack_ms_bound(gen_end_ms) <= ckpt["last_ts"]:
                 gi += 1  # generation already drained (resume edge)
                 continue
-
+            now_ms = (self.clock() if self.clock
+                      else gen_end_ms + self.cfg.late_writes_window_ms + 1)
             try:
-                w = compute_fetching_window(last_ts, gen_end_ms, now_ms, self.cfg)
-                w = self._crop_window_to_rows(gstart, w)
+                rec = self._step(gens, gi, ckpt, gen_end_ms, now_ms)
             except NotReady:
                 if self.clock is None:
                     raise  # cannot happen in replay mode
                 time.sleep(self.cfg.poll_idle_s * self.cfg.sleep_scale)
                 continue
-
-            # task-assignment subset: checkpoint lineage is only stamped
-            # onto groups THIS engine owns (a sharded consumer's empty
-            # windows must not claim progress for foreign groups)
-            if self.stream_groups is not None or self.group_salt:
-                mine = set(self.stream_groups or []) | set(self.group_salt)
-                owned = [g for g in lay["groups"] if g in mine]
-            else:
-                owned = lay["groups"]
-
-            if not self._window_has_data(gstart, w):
-                # footer-stats pruning: the window provably holds no
-                # events — advance lineage with a manifest-only commit,
-                # zero Spark jobs (pending ranges carry over untouched;
-                # an empty window cannot close or open a range — but a
-                # GENERATION BARRIER still drops them: range tombstones
-                # never straddle generations)
-                groups_ckpt = dict(ckpt.get("groups", {}))
-                for g in owned:
-                    ent = groups_ckpt.get(str(g), {"rows_applied": 0})
-                    ent.update({"generation": gstart, "last_ts": w.end_ts})
-                    groups_ckpt[str(g)] = ent
-                is_last_gen = gi + 1 >= len(gens)
-                new_ckpt = {
-                    # stay ON the open generation when closing it (see
-                    # the data-window commit below): a later tail()
-                    # must be able to consume post-replay appends
-                    "gen_index": gi + 1
-                    if (w.last_window and not is_last_gen) else gi,
-                    "last_ts": w.end_ts,
-                    "groups": groups_ckpt,
-                    "pending_ranges": [] if w.last_window else [
-                        {**p, "stream_id": p["stream_id"].hex()}
-                        for p in pending
-                    ],
-                    "done": bool(w.last_window and is_last_gen),
-                }
-                self.sink.commit_checkpoint(new_ckpt, shard=self.shard_id)
-                stats.windows += 1
-                stats.per_window.append(
-                    {"gen": gstart, "start": w.start_ts, "end": w.end_ts,
-                     "rows": 0, "merge_s": 0.0, "skipped": True}
-                )
-                ckpt = new_ckpt
-                last_ts = w.end_ts
-                if w.last_window:
-                    pending = []
-                    stats.generations += 1
-                    gi += 1
-                continue
-
-            # One window = one bounded slice (the reference's fetch window
-            # caps memory the same way). NOT cached by default: each
-            # consumer re-scans the parquet with its own opcode/column
-            # pushdown (the tombstone passes touch only ops 4-8 row
-            # groups), which measured faster than materializing the full
-            # slice — opt back in with extra={"persist_slice": True}.
-            slice_df = self._read_window(gstart, w)
-            if self.cfg.extra.get("persist_slice", False):
-                slice_df = slice_df.persist()
-            fold = fold_batch(
-                slice_df, self.table, pending, mode=self.cfg.mode,
-                impl=self.cfg.extra.get("fold_impl", "sql"),
-            )
-            if self.cfg.mode == "preimage":
-                stats.preimage_mismatches += self._verify_preimages(
-                    slice_df, fold)
-            group_rows: dict[str, int] = {}
-            window_rows = 0
-            if collect_group_metrics:
-                for r in (
-                    slice_df.groupBy(COL_STREAM_GROUP).count().collect()
-                ):
-                    group_rows[str(r[COL_STREAM_GROUP])] = r["count"]
-                window_rows = sum(group_rows.values())
-
-            groups_ckpt = dict(ckpt.get("groups", {}))
-            for g in owned:
-                ent = groups_ckpt.get(str(g), {"rows_applied": 0})
-                ent.update(
-                    {
-                        "generation": gstart,
-                        "last_ts": w.end_ts,
-                        "rows_applied": ent.get("rows_applied", 0)
-                        + group_rows.get(str(g), 0),
-                        "streams": [s.hex() for s in streams][:64],
-                    }
-                )
-                groups_ckpt[str(g)] = ent
-
-            is_last_gen = gi + 1 >= len(gens)
-            # pending_ranges omitted: merge() transports them via the
-            # tombstone sidecar write and fills the checkpoint itself
-            # (one fewer Spark job per window than collecting here).
-            # EXCEPT at a generation barrier: pending range starts never
-            # straddle generations (Worker.java:135-139 barrier) — pin
-            # [] so a crash right after the last window cannot resume
-            # with stale starts injected into the next generation, where
-            # a later END op could mis-pair into a spurious tombstone
-            new_ckpt = {
-                # the OPEN (final) generation's close bound is only the
-                # footer max at replay time — the generation can keep
-                # growing. Persist gen_index pointing AT it (done=True
-                # still short-circuits a re-replay), so a later tail()
-                # resumes INSIDE it from last_ts and consumes
-                # post-replay appends; advancing past it made those
-                # events unreachable forever once a next generation
-                # appeared (tail reads only generation==gens[gi])
-                "gen_index": gi + 1 if (w.last_window and not is_last_gen)
-                else gi,
-                "last_ts": w.end_ts,
-                "groups": groups_ckpt,
-                "done": bool(w.last_window and is_last_gen),
-            }
-            if w.last_window:
-                new_ckpt["pending_ranges"] = []
-                new_ckpt["pending_ends"] = []
-            mstats = self.sink.merge(fold, new_ckpt, shard=self.shard_id)
-            new_pending = mstats.get("pending_ranges", [])
-            if self.cfg.extra.get("persist_slice", False):
-                slice_df.unpersist()
-            if not collect_group_metrics:
-                # applied state rows from the delta parquet footers
-                # (driver-side, no extra Spark job — _tail_step path)
-                window_rows = mstats.get("delta_rows", 0)
-
+            ckpt = rec.pop("ckpt")
             stats.windows += 1
-            stats.rows += window_rows
-            stats.merge_s += mstats.get("merge_s", 0.0)
-            stats.per_window.append(
-                {"gen": gstart, "start": w.start_ts, "end": w.end_ts,
-                 "rows": window_rows, "merge_s": mstats.get("merge_s")}
-            )
-            ckpt = new_ckpt
-            last_ts = w.end_ts
-            pending = new_pending
-            if w.last_window:
-                # generation barrier (Worker.java:135-139): switch stream
-                # sets; pending ranges never straddle generations
-                pending = []
+            stats.rows += rec["rows"]
+            stats.merge_s += rec["merge_s"]
+            stats.preimage_mismatches += rec.get("preimage_mismatches", 0)
+            stats.per_window.append(rec)
+            if rec["last_window"]:
+                # generation barrier (Worker.java:135-139): switch
+                # stream sets
                 stats.generations += 1
                 gi += 1
-
         stats.wall_s = time.time() - t_start
         return stats
 
@@ -799,109 +738,34 @@ class Engine:
             self._gens_fetched_ms = now
         return self._gens_cache
 
-    def _owned_gen_groups(self, gstart: int) -> list[int]:
-        """Stream groups this engine owns within a generation — the
-        groups present on disk (one directory listing), intersected
-        with the task assignment when sharded. Tail-mode checkpoint
-        lineage stamps exactly these (mirrors replay's owned-subset
-        stamping; a sharded consumer must not claim foreign progress)."""
-        base = os.path.join(self.log_dir, f"generation={gstart}")
-        present: list[int] = []
-        try:
-            for d in os.listdir(base):
-                if d.startswith("stream_group="):
-                    present.append(int(d.split("=", 1)[1]))
-        except OSError:
-            return []
-        if self.stream_groups is not None or self.group_salt:
-            mine = set(self.stream_groups or []) | set(self.group_salt)
-            present = [g for g in present if g in mine]
-        return sorted(present)
-
     def _tail_step(self) -> dict | None:
         self._log_df = None  # re-list: tail mode must see newly appended files
         gens = self._generations_cached()
-        ckpt = self.sink.checkpoint(shard=self.shard_id) or {
-            "gen_index": 0,
-            "last_ts": EPOCH_START,
-            "groups": {},
-            "pending_ranges": [],
-            "done": False,
-        }
+        ckpt = self._checkpoint()
         gi = ckpt["gen_index"]
         if gi >= len(gens):
             return None
-        gstart, _ = gens[gi]
         # generation-age guard (GenerationsFetcher.java:88): a generation
         # younger than 30 s may still be publishing its stream list —
         # live tail must not start consuming it yet (replay mode is
         # exempt: a historical log's generations are complete by
         # definition, matching the reference where the guard lives in
         # live generation discovery only)
-        if self.clock() - gstart < self.cfg.min_generation_age_ms:
+        if self.clock() - gens[gi][0] < self.cfg.min_generation_age_ms:
             return None
+        # live tail never closes the open generation
         gen_end_ms = gens[gi + 1][0] if gi + 1 < len(gens) else None
         try:
-            w = compute_fetching_window(
-                ckpt["last_ts"], gen_end_ms, self.clock(), self.cfg
-            )
-            w = self._crop_window_to_rows(gstart, w)
+            rec = self._step(gens, gi, ckpt, gen_end_ms, self.clock())
         except NotReady:
             return None
-        # per-group lineage (same stamping as replay's owned subset):
-        # generation + last_ts onto every owned group present on disk
-        groups_ckpt = dict(ckpt.get("groups", {}))
-        for g in self._owned_gen_groups(gstart):
-            ent = groups_ckpt.get(str(g), {"rows_applied": 0})
-            ent.update({"generation": gstart, "last_ts": w.end_ts})
-            groups_ckpt[str(g)] = ent
-        if not self._window_has_data(gstart, w):
-            # idle poll with provably no events: zero Spark jobs
-            new_ckpt = {
-                "gen_index": gi + 1 if w.last_window else gi,
-                "last_ts": w.end_ts,
-                "groups": groups_ckpt,
-                "pending_ranges": [] if w.last_window else
-                    ckpt.get("pending_ranges", []),
-                "done": bool(w.last_window and gi + 1 >= len(gens)),
-            }
-            self.sink.commit_checkpoint(new_ckpt, shard=self.shard_id)
-            return {"rows": 0, "cropped": w.cropped, "skipped": True}
-        slice_df = self._read_window(gstart, w)
-        pending = [
-            {**p, "stream_id": bytes.fromhex(p["stream_id"])}
-            for p in ckpt.get("pending_ranges", [])
-        ]
-        fold = fold_batch(
-            slice_df, self.table, pending, mode=self.cfg.mode,
-            impl=self.cfg.extra.get("fold_impl", "sql"),
-        )
-        mismatches = 0
-        if self.cfg.mode == "preimage":
-            # same verification replay() runs — live tail must not
-            # silently drop the mode's guarantee
-            mismatches = self._verify_preimages(slice_df, fold)
-        new_ckpt = {
-            "gen_index": gi + 1 if w.last_window else gi,
-            "last_ts": w.end_ts,
-            "groups": groups_ckpt,
-            "done": bool(w.last_window and gi + 1 >= len(gens)),
-        }
-        if w.last_window:
-            # generation barrier: pending ranges never straddle
-            # generations — pin [] so merge() does not fill it
-            new_ckpt["pending_ranges"] = []
-            new_ckpt["pending_ends"] = []
-        # rows-applied metric comes from the delta segment's parquet
-        # footers (driver-side) — round 2 ran an extra full-scan
-        # count() job per tail window just for the backoff decision
-        mstats = self.sink.merge(fold, new_ckpt, shard=self.shard_id)
+        if rec.get("skipped"):
+            return {"rows": 0, "cropped": rec["cropped"], "skipped": True}
         # backoff signal = consumed CHANGES, not just applied state
         # rows: a tombstone-only window (ops 4-8) writes an empty
         # key-state delta but real sidecar rows — the reference keys
         # its busy tier on consumed changes (Worker.java:130), so a
         # delete storm must poll at the busy tier, not idle
-        return {"rows": mstats.get("delta_rows", 0)
-                + mstats.get("tomb_rows", 0),
-                "cropped": w.cropped,
-                "preimage_mismatches": mismatches}
+        return {"rows": rec["rows"] + rec["tomb_rows"],
+                "cropped": rec["cropped"],
+                "preimage_mismatches": rec["preimage_mismatches"]}

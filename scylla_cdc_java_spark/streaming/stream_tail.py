@@ -42,8 +42,8 @@ import os
 from pyspark.sql import SparkSession
 
 from ..model import DEFAULT_TABLE, EngineConfig, TableConfig
-from ..operators.fold import fold_batch, normalize_log
-from ..sinks.parquet_merge import ParquetMergeSink
+from ..operators.fold import normalize_log
+from .engine import apply_slice, make_sink
 
 
 class StructuredTail:
@@ -69,14 +69,7 @@ class StructuredTail:
             target_path.rstrip("/") + "_stream_ckpt"
         )
         self.max_files_per_trigger = max_files_per_trigger
-        self.sink = ParquetMergeSink(
-            spark,
-            target_path,
-            table,
-            num_buckets=self.cfg.num_buckets,
-            salt_buckets=self.cfg.salt_buckets,
-            compact_threshold=self.cfg.compact_threshold,
-        )
+        self.sink = make_sink(spark, target_path, table, self.cfg)
         self.batches_applied = 0
         #: op-0 mismatches found so far (mode="preimage" only) — the
         #: streaming twin of ReplayStats.preimage_mismatches
@@ -98,9 +91,7 @@ class StructuredTail:
         )
 
     def _apply_batch(self, batch_df, batch_id: int) -> None:
-        ckpt = self.sink.checkpoint() or {
-            "pending_ranges": [], "pending_ends": [], "batches": 0,
-        }
+        ckpt = self.sink.checkpoint() or {}
         # Redelivery guard: foreachBatch is at-least-once — if the sink
         # manifest committed batch_id but the stream offset log did not
         # (crash in between), the restarted query re-delivers the batch.
@@ -110,29 +101,6 @@ class StructuredTail:
         # later) — so an already-committed batch is a strict no-op.
         if batch_id <= ckpt.get("last_stream_batch_id", -1):
             return
-        pending = [
-            {**p, "stream_id": bytes.fromhex(p["stream_id"])}
-            for p in ckpt.get("pending_ranges", [])
-        ]
-        pending_ends = [
-            {**p, "stream_id": bytes.fromhex(p["stream_id"])}
-            for p in ckpt.get("pending_ends", [])
-        ]
-        slice_df = normalize_log(batch_df)
-        fold = fold_batch(
-            slice_df, self.table, pending, mode=self.cfg.mode,
-            impl=self.cfg.extra.get("fold_impl", "sql"),
-            pending_range_ends=pending_ends,
-        )
-        if self.cfg.mode == "preimage":
-            # same verification replay()/tail() run (shared
-            # operators/preimage.verify_preimages): the mode's
-            # guarantee must not silently vanish on the Structured
-            # Streaming surface either
-            from ..operators.preimage import verify_preimages
-
-            self.preimage_mismatches += verify_preimages(
-                self.sink, self.table, slice_df, fold)
         # pending starts AND orphan ends ride the tombstone sidecar
         # write (kind 2/3); merge() fills both checkpoint keys itself —
         # two fewer Spark collect jobs per microbatch
@@ -140,7 +108,9 @@ class StructuredTail:
             "batches": ckpt.get("batches", 0) + 1,
             "last_stream_batch_id": batch_id,
         }
-        self.sink.merge(fold, new_ckpt)
+        _, mismatches = apply_slice(self.sink, self.table, self.cfg.mode,
+                                    normalize_log(batch_df), ckpt, new_ckpt)
+        self.preimage_mismatches += mismatches
         self.batches_applied += 1
 
     # ------------------------------------------------------------------

@@ -294,8 +294,7 @@ def test_idle_tail_poll_runs_zero_spark_jobs(spark, tmp_root):
     {"num_buckets": 1},
     {"compact_threshold": 1},        # copy-on-write degenerate mode
     {"salt_buckets": 1},
-    {"num_buckets": 1, "compact_threshold": 1, "salt_buckets": 1,
-     "shuffle_partitions": 1},
+    {"num_buckets": 1, "compact_threshold": 1, "salt_buckets": 1},
 ], ids=["single_bucket", "cow_threshold1", "no_salt", "all_min"])
 def test_degenerate_config_matrix(spark, tmp_root, kw):
     """Degenerate sink/engine configs (one bucket, per-window

@@ -148,10 +148,9 @@ def test_stream_tail_resume_after_restart(spark, tmp_root):
     assert _state(tail2.sink) == state1
 
 
-def test_stream_tail_pandas_fold_matches_oracle(spark, tmp_root):
-    """StructuredTail honors the fold_impl override (engine parity):
-    the general applyInPandas fold path through the streaming surface
-    equals the oracle on an aggressive delete mix."""
+def test_stream_tail_aggressive_delete_mix_matches_oracle(spark, tmp_root):
+    """The streaming surface equals the oracle on an aggressive delete
+    mix with duplicate deliveries."""
     spec = GenSpec(seed=505, n_events=1200, n_repos=15, paths_per_repo=6,
                    n_generations=1, streams_per_generation=4,
                    p_update=0.40, p_insert=0.10, p_row_delete=0.25,
@@ -161,7 +160,25 @@ def test_stream_tail_pandas_fold_matches_oracle(spark, tmp_root):
     info = write_world(world, f"{tmp_root}/world_stream_pf")
     tail = StructuredTail(
         spark, info["log_dir"], f"{tmp_root}/target_stream_pf",
-        cfg=EngineConfig(extra={"fold_impl": "pandas"}),
     )
     assert tail.run_available_now() >= 1
     assert _state(tail.sink) == final_state(replay(world["events"]))
+
+
+def test_stream_tail_sink_honors_engine_config(spark, tmp_root):
+    """StructuredTail builds its sink from the same EngineConfig fields
+    as Engine: a configured bloom column must reach the table root."""
+    import json
+
+    spec = GenSpec(seed=13, n_events=400, n_repos=10, paths_per_repo=4,
+                   n_generations=1, streams_per_generation=2)
+    info = write_world(generate_world(spec), f"{tmp_root}/world_stream_cfg")
+    target = f"{tmp_root}/target_stream_cfg"
+    tail = StructuredTail(
+        spark, info["log_dir"], target,
+        cfg=EngineConfig(bloom_columns=("lang",), minor_compact_ratio=0.25),
+    )
+    assert tail.run_available_now() >= 1
+    with open(os.path.join(target, "MANIFEST.json")) as f:
+        assert json.load(f)["bloom"]["columns"] == ["lang"]
+    assert tail.sink.minor_compact_ratio == 0.25

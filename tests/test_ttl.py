@@ -140,11 +140,14 @@ def test_ttl_insert_marker_expiry_unit():
     assert row["content"] is None  # expired with the insert's TTL
 
 
-def test_sql_and_pandas_fold_agree_on_ttl(spark, tmp_root):
-    """The SQL max(struct) path and the grouped-pandas path must fold
-    identical per-cell TTLs."""
-    from pyspark.sql import functions as F
-
+def test_fold_cell_ttls_match_oracle(spark, tmp_root):
+    """The fold carries each cell's winning write TTL (and the INSERT
+    marker's) exactly as the row-at-a-time oracle does: every folded
+    (value, ts, ttl) triple equals the oracle's, so expiry agrees at
+    every read instant — including one that expires only some cells."""
+    from scylla_cdc_java_spark.model import (
+        COL_MARKER_TS, COL_MARKER_TTL, DEFAULT_TABLE,
+    )
     from scylla_cdc_java_spark.operators.fold import fold_batch, normalize_log
 
     spec = GenSpec(seed=22, n_events=800, n_repos=10, paths_per_repo=6,
@@ -153,15 +156,22 @@ def test_sql_and_pandas_fold_agree_on_ttl(spark, tmp_root):
     world = generate_world(spec)
     info = write_world(world, f"{tmp_root}/world_ttl2")
     log = normalize_log(spark.read.parquet(info["log_dir"]))
-    from scylla_cdc_java_spark.model import DEFAULT_TABLE
+    cells, markers = {}, {}
+    for r in fold_batch(log, DEFAULT_TABLE).key_state.collect():
+        key = (r["repo"], (r["path"],))
+        for c in DEFAULT_TABLE.value_columns:
+            if r[f"_ts_{c}"] is not None:
+                cells.setdefault(key, {})[c] = (
+                    r[c], r[f"_ts_{c}"], r[f"_ttl_{c}"])
+        if r[COL_MARKER_TS] is not None:
+            markers[key] = (r[COL_MARKER_TS], r[COL_MARKER_TTL])
+    st = replay(world["events"])
+    assert cells == {k: v for k, v in st.cells.items() if v}
+    assert markers == st.markers
 
-    a = fold_batch(log, DEFAULT_TABLE, impl="sql").key_state
-    b = fold_batch(log, DEFAULT_TABLE, impl="pandas").key_state
-    cols = sorted(a.columns)
-    key = lambda t: tuple(repr(v) for v in t)  # noqa: E731 (None-safe sort)
-    ra = sorted((tuple(r[c] for c in cols) for r in a.collect()), key=key)
-    rb = sorted(
-        (tuple(r[c] for c in cols) for r in b.select(*a.columns).collect()),
-        key=key,
-    )
-    assert ra == rb
+    # the check has teeth: at this instant some winning cells have
+    # expired and some have not
+    as_of = max(world["events"]["ms"]) + 30_000_000
+    alive = [ttl is None or ts // SEQ_MOD + ttl * 1000 > as_of
+             for row in cells.values() for _v, ts, ttl in row.values()]
+    assert any(alive) and not all(alive)

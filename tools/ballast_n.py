@@ -60,12 +60,11 @@ def _child(argv: list[str]) -> None:
         target = os.path.join(workdir, f"target_{role}{idx}_{tag}")
         eng = Engine(
             spark, log_dir, gens, target,
-            cfg=EngineConfig(window_length_limit_ms=600_000, num_buckets=32,
-                             shuffle_partitions=1),
+            cfg=EngineConfig(window_length_limit_ms=600_000, num_buckets=32),
             stream_groups=groups, group_salt=group_salt,
         )
         t0 = time.time()
-        eng.replay(collect_group_metrics=False)
+        eng.replay()
         wall = time.time() - t0
         shutil.rmtree(target, ignore_errors=True)
         return wall

@@ -50,8 +50,7 @@ def main() -> None:
     try:
         eng = Engine(
             spark, info["log_dir"], info["generations_path"], target,
-            cfg=EngineConfig(window_length_limit_ms=600_000, num_buckets=32,
-                             shuffle_partitions=16),
+            cfg=EngineConfig(window_length_limit_ms=600_000, num_buckets=32),
         )
         s0, t0 = _steal_s(), time.time()
         stats = eng.replay()

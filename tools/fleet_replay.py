@@ -92,7 +92,6 @@ def _child(argv: list[str]) -> None:
                 window_length_limit_ms=int(
                     os.environ.get("FLEET_WINDOW_MS", "600000")),
                 num_buckets=int(os.environ.get("FLEET_NUM_BUCKETS", "32")),
-                shuffle_partitions=cores,
                 compact_threshold=10**6 if shared_target else 8,
             ),
             stream_groups=groups,
@@ -100,7 +99,7 @@ def _child(argv: list[str]) -> None:
             shard_id=f"e{exec_idx}" if shared_target else None,
         )
         t0 = time.time()
-        stats = eng.replay(collect_group_metrics=False)
+        stats = eng.replay()
         return time.time() - t0, stats.rows
 
     if not os.environ.get("FLEET_SKIP_WARM"):

@@ -97,11 +97,10 @@ def main() -> None:
         eng = Engine(
             spark, info["log_dir"], info["generations_path"], target,
             cfg=EngineConfig(window_length_limit_ms=600_000,
-                             num_buckets=NUM_BUCKETS,
-                             shuffle_partitions=CPUS),
+                             num_buckets=NUM_BUCKETS),
         )
         t0, s0 = time.time(), _steal_s()
-        eng.replay(collect_group_metrics=False)
+        eng.replay()
         report["backfill_replay_s"] = round(time.time() - t0, 2)
         report["table_rows"] = eng.sink.read().count()
 
