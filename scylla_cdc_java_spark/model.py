@@ -239,7 +239,6 @@ class EngineConfig:
     # + footer-stats window pruning)
     gen_refresh_quiet_ms: int = 10_000
     num_buckets: int = 32  # target-table storage buckets (partition-key hash)
-    salt_buckets: int = 8  # salting fan-out for hot partition keys
     # merge-on-read: compact a bucket once it accumulates this many
     # delta segments (amortized bucket-rewrite cost = 1/compact_threshold
     # per window); 1 = copy-on-write per window

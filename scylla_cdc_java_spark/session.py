@@ -48,6 +48,14 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
                 "2")
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
+        # The sink opens segment dirs it already knows from its manifest
+        # (O(touched buckets x segments) paths). Above this many paths
+        # Spark lists them with a distributed job; on the local FS the
+        # driver lists 10^3 dirs in ~0.2 s where that job takes ~4 s,
+        # and 10^4 in ~1.5 s vs ~30 s (4-core host), so list on the
+        # driver up to 10^4 paths.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "10000")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

@@ -178,7 +178,6 @@ class ParquetMergeSink:
         path: str,
         table: TableConfig = DEFAULT_TABLE,
         num_buckets: int = 32,
-        salt_buckets: int = 8,
         compact_threshold: int = 8,
         snapshot_retention: int | None = None,
         reader_lease_s: float = 60.0,
@@ -197,7 +196,6 @@ class ParquetMergeSink:
         self.path = path
         self.table = table
         self.num_buckets = num_buckets
-        self.salt_buckets = salt_buckets
         # keep at most this many snapshot manifest files (None =
         # unbounded history until an explicit vacuum)
         self.snapshot_retention = snapshot_retention
@@ -300,7 +298,6 @@ class ParquetMergeSink:
             collection_columns=tuple(root.get("collection_columns", ())),
         )
         kwargs.setdefault("num_buckets", root.get("num_buckets", 32))
-        kwargs.setdefault("salt_buckets", root.get("salt_buckets", 8))
         return cls(spark, path, table=table, **kwargs)
 
     # ------------------------------------------------------------------
@@ -1721,7 +1718,6 @@ class ParquetMergeSink:
                     "clustering_key": list(tbl.clustering_key),
                 },
                 "num_buckets": nb,
-                "salt_buckets": self.salt_buckets,
                 # the merge root is built explicitly (not copied from
                 # cur), so persisted sort-order evolution must be
                 # carried or the first merge after a sorted compaction
@@ -1973,16 +1969,65 @@ class ParquetMergeSink:
         return df.where(F.col(COL_LIVE) | F.coalesce(keep_row, F.lit(False)))
 
     # ------------------------------------------------------------------
+    def _write_bases(self, resolved: DataFrame, rel_out: str,
+                     order: list[str], num_buckets: int | None = None
+                     ) -> dict[str, str]:
+        """The segment write shared by ``compact()`` (resolved bases,
+        or a minor compaction's merged delta) and ``rebucket()``: route
+        rows to ``num_buckets`` (default: the live count), write one
+        ``__bucket=b`` dir per bucket under the table-relative dir
+        ``rel_out`` and return ``{bucket: its relative dir}``. The
+        REBALANCE exchange on the bucket lets AQE size the tasks from
+        the data: small buckets coalesce into a few tasks, each writing
+        ONE file per bucket it holds, and a bucket above
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is split
+        across several tasks, i.e. several files, each sorted.
+
+        Sorted base segments: parquet row-group min/max stats on the
+        leading sort columns become tight disjoint ranges, so reads
+        skip row groups INSIDE the one bucket they open — by default
+        pk-sorted (``lookup()`` pushes pk equality into the scan;
+        clustering-range reads prune; sorted keys compress better);
+        with a persisted ``sort_by`` order the hot filter column leads
+        and ``scan()``'s residual filter skips instead. Cost is a
+        per-task sort at compaction time — amortized over every read
+        until the next compact."""
+        w = (
+            resolved.withColumn(BUCKET_COL, self._bucket_expr(num_buckets))
+            .hint("rebalance", BUCKET_COL)
+            .sortWithinPartitions(
+                F.col(BUCKET_COL),
+                *[F.col(c) for c in order],
+                *[F.col(c) for c in self.table.primary_key],
+            )
+            .write.mode("overwrite")
+        )
+        if self.parquet_block_bytes:
+            w = w.option("parquet.block.size", self.parquet_block_bytes)
+        staging = os.path.join(self.path, rel_out)
+        w.partitionBy(BUCKET_COL).parquet(staging)
+        if not os.path.exists(staging):
+            return {}
+        return {
+            d.split("=", 1)[1]: os.path.join(rel_out, d)
+            for d in sorted(os.listdir(staging))
+            if d.startswith(BUCKET_COL + "=")
+        }
+
+    # ------------------------------------------------------------------
     def compact(self, buckets: list[int] | None = None,
                 expire_before_ms: int | None = None,
                 sort_by: list[str] | None = None,
                 minor: bool = False) -> dict:
         """Collapse each selected bucket (default: every bucket with
         multiple row segments or any tombstone sidecar) to ONE resolved
-        base segment, folding its accumulated sidecar tombstones into
-        the rows and CLEARING them — the lake analogue of tombstone GC
-        at compaction. Within the window between a tombstone's arrival
-        and its compaction it shadows by timestamp (oracle semantics);
+        base segment (one sorted parquet file per bucket, or several
+        when the bucket is larger than AQE's advisory partition size
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), folding
+        its accumulated sidecar tombstones into the rows and CLEARING
+        them — the lake analogue of tombstone GC at compaction. Within
+        the window between a tombstone's arrival and its compaction it
+        shadows by timestamp (oracle semantics);
         after folding, its effect lives in each covered row's
         ``_ts_tomb``. Atomic: same manifest-swap commit; crash loses
         only the compaction work, never table state.
@@ -2103,40 +2148,7 @@ class ParquetMergeSink:
         rel_out = os.path.join("data", f"v{version}-{tok}",
                                "rows" if minor else "base")
         staging = os.path.join(self.path, rel_out)
-        n_parts = max(len(csel) * min(self.salt_buckets, 4), 1)
-        ck_cols = [F.col(c) for c in self.table.clustering_key]
-        w = (
-            resolved.withColumn(BUCKET_COL, self._bucket_expr())
-            .withColumn(
-                "__salt",
-                F.pmod(F.xxhash64(*ck_cols), F.lit(self.salt_buckets)).cast("int"),
-            )
-            .repartition(n_parts, F.col(BUCKET_COL), F.col("__salt"))
-            .drop("__salt")
-            # sorted base segments: parquet row-group min/max stats on
-            # the leading sort columns become tight disjoint ranges, so
-            # reads skip row groups INSIDE the one bucket they open —
-            # by default pk-sorted (``lookup()`` pushes pk equality
-            # into the scan; clustering-range reads prune; sorted keys
-            # compress better); with a persisted ``sort_by`` order the
-            # hot filter column leads and ``scan()``'s residual filter
-            # skips instead. Cost is a per-task sort at compaction
-            # time — amortized over every read until the next compact.
-            .sortWithinPartitions(
-                F.col(BUCKET_COL),
-                *[F.col(c) for c in order],
-                *[F.col(c) for c in self.table.primary_key],
-            )
-            .write.mode("overwrite")
-        )
-        if self.parquet_block_bytes:
-            w = w.option("parquet.block.size", self.parquet_block_bytes)
-        w.partitionBy(BUCKET_COL).parquet(staging)
-        written: dict[str, str] = {}
-        if os.path.exists(staging):
-            for d in sorted(os.listdir(staging)):
-                if d.startswith(BUCKET_COL + "="):
-                    written[d.split("=", 1)[1]] = os.path.join(rel_out, d)
+        written = self._write_bases(resolved, rel_out, order)
         zone_cols = list(self.table.primary_key) + root["value_columns"]
         base_zone = {
             b: _seg_zone_stats(os.path.join(self.path, p), zone_cols)
@@ -2252,11 +2264,12 @@ class ParquetMergeSink:
 
         Cost model at scale: one resolved scan + one shuffle + one
         sorted write of the live table — the same shape as a full
-        compaction, embarrassingly parallel over (bucket, salt)
-        slices. The commit critical section stays O(num_buckets)
-        driver-side metadata (it writes one immutable per-bucket
-        manifest per NEW bucket plus one full sharded-index base —
-        the one commit where O(all buckets) is inherent)."""
+        compaction, with AQE sizing the write tasks from the data
+        (``_write_bases``), not a fixed task count. The commit critical
+        section stays O(num_buckets) driver-side metadata (it writes
+        one immutable per-bucket manifest per NEW bucket plus one full
+        sharded-index base — the one commit where O(all buckets) is
+        inherent)."""
         new_nb = int(new_num_buckets)
         if new_nb < 1:
             raise ValueError(f"new_num_buckets must be >= 1, got {new_nb}")
@@ -2287,40 +2300,11 @@ class ParquetMergeSink:
                     resolved = self._purge_expired(
                         resolved, root["value_columns"],
                         root["collection_columns"], expire_before_ms)
-                # same write shape as compact: pk-sorted bases, one
-                # file per new bucket; the task-count cap keeps a
-                # 10^5-bucket rewrite from scheduling 10^5+ tiny tasks
-                n_parts = max(
-                    1, min(new_nb * min(self.salt_buckets, 4), 8192))
-                ck_cols = [F.col(c) for c in self.table.clustering_key]
-                order = root.get("sort_order") or []
-                w = (
-                    resolved.withColumn(BUCKET_COL,
-                                        self._bucket_expr(new_nb))
-                    .withColumn(
-                        "__salt",
-                        F.pmod(F.xxhash64(*ck_cols),
-                               F.lit(self.salt_buckets)).cast("int"),
-                    )
-                    .repartition(n_parts, F.col(BUCKET_COL),
-                                 F.col("__salt"))
-                    .drop("__salt")
-                    .sortWithinPartitions(
-                        F.col(BUCKET_COL),
-                        *[F.col(c) for c in order],
-                        *[F.col(c) for c in self.table.primary_key],
-                    )
-                    .write.mode("overwrite")
-                )
-                if self.parquet_block_bytes:
-                    w = w.option("parquet.block.size",
-                                 self.parquet_block_bytes)
-                w.partitionBy(BUCKET_COL).parquet(staging)
-                if os.path.exists(staging):
-                    for d in sorted(os.listdir(staging)):
-                        if d.startswith(BUCKET_COL + "="):
-                            written[d.split("=", 1)[1]] = os.path.join(
-                                rel_out, d)
+                # same write as compact, routed by the NEW bucket
+                # count: one pk-sorted file per new bucket, several for a
+                # bucket above AQE's advisory partition size
+                written = self._write_bases(
+                    resolved, rel_out, root.get("sort_order") or [], new_nb)
             reb_zone_cols = (list(self.table.primary_key)
                              + root["value_columns"])
             reb_zone = {

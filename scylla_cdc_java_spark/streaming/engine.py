@@ -190,7 +190,6 @@ def make_sink(spark: SparkSession, target_path: str, table: TableConfig,
         target_path,
         table,
         num_buckets=cfg.num_buckets,
-        salt_buckets=cfg.salt_buckets,
         compact_threshold=cfg.compact_threshold,
         minor_compact_ratio=cfg.minor_compact_ratio,
         bloom_columns=(list(cfg.bloom_columns)

@@ -293,12 +293,11 @@ def test_idle_tail_poll_runs_zero_spark_jobs(spark, tmp_root):
 @pytest.mark.parametrize("kw", [
     {"num_buckets": 1},
     {"compact_threshold": 1},        # copy-on-write degenerate mode
-    {"salt_buckets": 1},
-    {"num_buckets": 1, "compact_threshold": 1, "salt_buckets": 1},
-], ids=["single_bucket", "cow_threshold1", "no_salt", "all_min"])
+    {"num_buckets": 1, "compact_threshold": 1},
+], ids=["single_bucket", "cow_threshold1", "all_min"])
 def test_degenerate_config_matrix(spark, tmp_root, kw):
     """Degenerate sink/engine configs (one bucket, per-window
-    compaction, no salt, everything minimal) must still replay to the
+    compaction, everything minimal) must still replay to the
     exact oracle state — no divide-by-zero/empty-partition corners."""
     spec = GenSpec(seed=888, n_events=2000, n_repos=15, paths_per_repo=6,
                    n_generations=2, gen_span_ms=90_000, p_range_delete=0.06)

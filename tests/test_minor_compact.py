@@ -358,3 +358,45 @@ def test_maintain_expiry_round_majors_everything(spark, tmp_root):
     st = m.maintain(expire_before_ms=1)  # below every live ts: no purge
     assert st["compacted"] and not st["minor_compacted"]
     assert _rows(m.read()) == want
+
+
+def test_bucket_without_base_plans_major(spark, tmp_root):
+    """An over-threshold bucket whose segments are all deltas (never
+    compacted) majors: a minor cannot establish its first base. Its
+    deltas are as small as those that fold minor over a base in the
+    same round, so only the missing base decides the plan."""
+    path = f"{tmp_root}/mc_nobase"
+    sink = ParquetMergeSink(spark, path, TableConfig(), num_buckets=4,
+                            compact_threshold=10**6,
+                            tomb_rows_compact_threshold=10**9)
+    _insert_world(spark, sink, n=60, start_ms=10)
+    sink.compact(buckets=[0, 1])  # bases for half the buckets only
+    repo_of = {}
+    for r in (spark.createDataFrame(
+            [(f"org/r{i:03d}",) for i in range(60)], "repo string")
+            .select("repo", sink._bucket_expr().alias("b")).collect()):
+        repo_of.setdefault(r["b"], r["repo"])
+    assert sorted(repo_of) == [0, 1, 2, 3]
+    for step, ms in ((2, 20), (3, 30)):  # one updated row per bucket
+        upd = [{"op": OP_ROW_UPDATE, "ms": ms, "seq": i, "repo": repo,
+                "path": "main.x", "lang": "go"}
+               for i, repo in enumerate(repo_of.values())]
+        sink.merge(fold_batch(_batch(spark, upd), sink.table),
+                   {"step": step})
+    want = _rows(sink.read())
+
+    m = ParquetMergeSink.for_existing(spark, path, compact_threshold=3,
+                                      minor_compact_ratio=0.5)
+    assert _seg_profile(m) == {"0": (1, 2, 0), "1": (1, 2, 0),
+                               "2": (0, 3, 0), "3": (0, 3, 0)}
+    index = m._load_root()["bucket_index"]
+    over = m._over_threshold(index)
+    assert over == [0, 1, 2, 3]
+    assert m._plan_compactions(index, over) == ([0, 1], [2, 3])
+
+    st = m.maintain()
+    assert sorted(st["minor_compacted"]) == ["0", "1"]
+    assert sorted(st["compacted"]) == ["2", "3"]
+    assert _seg_profile(m) == {"0": (1, 1, 0), "1": (1, 1, 0),
+                               "2": (1, 0, 0), "3": (1, 0, 0)}
+    assert _rows(m.read()) == want

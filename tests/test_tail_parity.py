@@ -66,7 +66,8 @@ def _gens(spark, tmp_root, tag):
 
 def test_tail_preimage_detects_corruption(spark, tmp_root):
     """Corrupted op-0 assertions must be COUNTED by tail() exactly as
-    replay() counts them (shared _verify_preimages); before the parity
+    replay() counts them (shared ``operators.preimage.verify_preimages``,
+    called from ``streaming.engine.apply_slice``); before the parity
     fix tail silently skipped verification and reported 0."""
     spec = GenSpec(seed=61, n_events=700, n_repos=20, paths_per_repo=8,
                    n_generations=1, streams_per_generation=4,

@@ -235,14 +235,11 @@ def main() -> None:
             return hit, total
 
         # scaled-down proxy: at 100 TB a bucket base is GBs — dozens of
-        # 128 MB row groups per file; here we shrink the group (32 KB)
-        # AND write one file per bucket (salt slicing is a write-skew
-        # guard; it would fragment this small table into 1-2-group
-        # files, and skipping cannot go below one group per file) so
+        # 128 MB row groups per file; here we shrink the group to
+        # 32 KB (compaction writes one file per bucket) so
         # groups-per-file stays realistic. The skip RATIO is the
         # scale-invariant quantity.
         eng.sink.parquet_block_bytes = 32 * 1024
-        eng.sink.salt_buckets = 1
         t0 = time.time()
         eng.sink.compact(buckets=list(range(NUM_BUCKETS)))  # pk default
         report["recompact_default_s"] = round(time.time() - t0, 2)
