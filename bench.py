@@ -7,14 +7,6 @@ Prints ONE JSON line:
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
-
---scaling additionally runs the SAME replay job on the SAME (larger)
-input at local[N] and local[4N] and reports throughput at both plus the
-scaling efficiency — the sandbox stand-in for the N vs 4N executor
-cluster rule (BASELINE.md). Measurement is steal-aware: this VM sees
-bursty host CPU steal (observed up to 2x wall inflation), so each level
-runs several warm iterations and keeps the fastest one whose steal share
-is low; per-iteration steal seconds are reported for transparency.
 """
 
 from __future__ import annotations
@@ -31,21 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CACHE = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/spark_graft_bench")
-# Scaling runs use a larger, mild-skew world: per-executor fixed cost
-# (~8-10 s: window planning, job scheduling, commit) must be small
-# against per-executor compute, which at the 10^10-event design scale it
-# is (10^10/125 executors = 8x10^7 events each) — 6x10^7 total events is
-# the smallest world where the 4N level isn't fixed-cost-bound. Mild
-# zipf (1.1, hottest repo ~9%) for the scaling world; the adversarial
-# 25%-hot-key worlds stay in the correctness suite where hot-group
-# salting (Engine.group_salt) is exercised.
-SCALING_EVENTS = int(os.environ.get("SPARK_GRAFT_SCALING_EVENTS", "60000000"))
-SCALING_ZIPF = float(os.environ.get("SPARK_GRAFT_SCALING_ZIPF", "1.1"))
-# 1-core executors: the measured >=0.8 (actually ~1.0) configuration —
-# 1+4 busy cores stay below this VM's shared-memory-bandwidth knee, so
-# the pair isolates the ENGINE's scaling (see SCALING_r2.json)
-SCALING_N = int(os.environ.get("SPARK_GRAFT_SCALING_N", "1"))
-SCALING_CORES = int(os.environ.get("SPARK_GRAFT_SCALING_CORES", "1"))
 
 # headline query subset (the rest run in the correctness gate)
 BENCH_QUERIES = [
@@ -70,10 +47,9 @@ def _sf_of(path: str) -> float:
         return 0.1
 
 
-def _spec(n_events: int, zipf_a: float | None = None):
+def _spec(n_events: int):
     from scylla_cdc_java_spark import GenSpec
 
-    kw = {"zipf_a": zipf_a} if zipf_a is not None else {}
     return GenSpec(
         seed=42,
         n_events=n_events,
@@ -85,7 +61,6 @@ def _spec(n_events: int, zipf_a: float | None = None):
         gen_span_ms=600_000,
         content_min=64,
         content_max=256,
-        **kw,
     )
 
 
@@ -195,7 +170,6 @@ def _session(cores: int):
 
 
 def main() -> None:
-    scaling = "--scaling" in sys.argv
     sf = _sf_of(SF_DIR)
 
     spec = _spec(max(20_000, int(20_000_000 * sf)))
@@ -256,106 +230,6 @@ def main() -> None:
         "gen_cached_s": round(gen_s, 2),
         "events_per_sec": replay["events_per_sec"],
     }
-
-    # Attach the most recent full scaling campaign (tools/scaling_probe.py
-    # — 30-60 min of steal-screened fleet runs on the 64.9M-event world,
-    # too long for the per-round bench budget; protocol + raw attempts
-    # inside). Re-run `python tools/scaling_probe.py SCALING_r2.json` to
-    # refresh.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    probe_path = next(
-        (p for name in ("SCALING_r5.json", "SCALING_r4.json",
-                        "SCALING_r3.json", "SCALING_r2.json")
-         if os.path.exists(p := os.path.join(repo_dir, name))),
-        None,
-    )
-    if probe_path:
-        with open(probe_path) as f:
-            probe = json.load(f)
-        out["scaling_evidence"] = {
-            "source": "tools/scaling_probe.py + tools/ballast_n.py "
-                      "(pre-run campaigns, raw attempts in "
-                      f"{os.path.basename(probe_path)}, analysis in "
-                      "BASELINE.md)",
-            "world": probe.get("world"),
-            "n_attempts_events_per_sec":
-                probe.get("n_attempts_events_per_sec"),
-            "n4_attempts_events_per_sec":
-                probe.get("n4_attempts_events_per_sec"),
-            "ballast_normalized_n_events_per_sec":
-                probe.get("ballast_n", {}).get("events_per_sec"),
-            "efficiency_raw_best_clean":
-                probe.get("efficiency_raw_best_clean"),
-            "efficiency_normalized_vs_ballast":
-                probe.get("efficiency_normalized_vs_ballast"),
-            "equal_cores_control_ratio":
-                probe.get("equal_total_cores_control", {}).get("ratio"),
-            "date": probe.get("protocol", {}).get("date"),
-        }
-        mw = probe.get("multi_writer_shared_target")
-        if mw:
-            out["scaling_evidence"]["multi_writer_shared_target"] = {
-                "best_clean_events_per_sec":
-                    mw.get("best_clean", {}).get("events_per_sec"),
-                "vs_separate_targets":
-                    mw.get("vs_separate_targets_best_clean"),
-                "bigworld_4x4c_events_per_sec":
-                    mw.get("bigworld_4x4c", {}).get("events_per_sec"),
-            }
-
-    if scaling:
-        # The same job on the same (larger) input at N and 4N executors.
-        # Primary evidence: the multi-process executor fleet (process =
-        # executor, own JVM/heap/target, disjoint stream-group shard —
-        # the reference's Vnode Task assignment) because single-JVM
-        # thread scaling on this VM hits guest-kernel + shared-allocator
-        # contention beyond ~8 threads that a real multi-executor
-        # cluster does not share. Secondary: single-JVM local[N] vs
-        # local[4N] threads, reported for transparency.
-        sys.path.insert(0, os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "tools"))
-        from fleet_replay import run_fleet
-
-        sinfo = world_for(_spec(SCALING_EVENTS, SCALING_ZIPF))
-        n, n4 = SCALING_N, SCALING_N * 4
-        cores_per_exec = SCALING_CORES
-        fleet_small = run_fleet(sinfo["log_dir"], sinfo["generations_path"],
-                                n, cores_per_exec)
-        fleet_big = run_fleet(sinfo["log_dir"], sinfo["generations_path"],
-                              n4, cores_per_exec)
-        fleet_eff = (
-            fleet_big["events_per_sec"] / fleet_small["events_per_sec"]
-        ) / (n4 / n)
-
-        tn, tn4 = n * cores_per_exec, n4 * cores_per_exec
-        spark = _session(tn4)
-        big = _replay_iters(spark, sinfo, tn4, iters=2)
-        spark.stop()
-        spark = _session(tn)
-        small = _replay_iters(spark, sinfo, tn, iters=2)
-        spark.stop()
-        eff = (big["events_per_sec"] / small["events_per_sec"]) / (tn4 / tn)
-        out["scaling"] = {
-            "events": sinfo["n_rows"],
-            "fleet": {
-                "n_executors": n,
-                "n4_executors": n4,
-                "cores_per_executor": cores_per_exec,
-                "n": fleet_small,
-                "n4": fleet_big,
-                "efficiency": round(fleet_eff, 3),
-            },
-            "threads": {
-                "n_cores": tn,
-                "n4_cores": tn4,
-                "n_events_per_sec": small["events_per_sec"],
-                "n4_events_per_sec": big["events_per_sec"],
-                "n_iterations": small["iterations"],
-                "n4_iterations": big["iterations"],
-                "efficiency": round(eff, 3),
-            },
-            "efficiency": round(fleet_eff, 3),
-        }
 
     print(json.dumps(out))
 

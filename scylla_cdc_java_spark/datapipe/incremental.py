@@ -313,10 +313,6 @@ class IncrementalMinHashIndex(_BucketSyncedIndex):
         """The current index: (pk columns..., sig, __bucket)."""
         return self.data()
 
-    @property
-    def _sig_dir(self) -> str:  # kept for back-compat with older tests
-        return self._data_dir
-
     def lsh_candidates(self, id_cols: list[str],
                        max_bucket: int = 64) -> DataFrame:
         """Banded-LSH candidate pairs straight off the maintained index

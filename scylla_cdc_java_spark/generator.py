@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -386,6 +387,13 @@ def write_world(world: dict, out_dir: str, stream_group_of=None) -> dict:
     Log layout: ``{out}/cdc_log/generation=<ms>/stream_group=<g>/
     time_bucket=<b>/part.parquet`` — hive partitioning so Spark prunes
     windowed scans (SURVEY.md O1).
+
+    Files are stamped with modification times in (generation,
+    time_bucket, stream_group) order, one millisecond apart: the arrival
+    order of a producer that closes time buckets chronologically. The
+    parallel dataset writer alone finishes files in arbitrary order
+    (often within one millisecond), and the Structured Streaming file
+    source delivers files by modification time.
     """
     os.makedirs(out_dir, exist_ok=True)
     gens = world["generations"]
@@ -458,9 +466,11 @@ def write_world(world: dict, out_dir: str, stream_group_of=None) -> dict:
     log_dir = os.path.join(out_dir, "cdc_log")
     import pyarrow.dataset as pads
 
+    written = []
     pads.write_dataset(
         tbl,
         log_dir,
+        file_visitor=lambda f: written.append(f.path),
         format="parquet",
         partitioning=pads.partitioning(
             pa.schema(
@@ -477,7 +487,24 @@ def write_world(world: dict, out_dir: str, stream_group_of=None) -> dict:
         min_rows_per_group=1 << 16,
         max_rows_per_group=1 << 20,
     )
+    _stamp_arrival_order(written)
     return {"log_dir": log_dir, "generations_path": os.path.join(out_dir, "generations.parquet"), "n_rows": n}
+
+
+def _stamp_arrival_order(paths: list[str]) -> None:
+    """Set the log files' mtimes in time-bucket order, 1 ms apart and
+    ending at the current millisecond."""
+
+    def key(path):
+        parts = dict(seg.split("=", 1) for seg in path.split(os.sep)[-4:-1])
+        return tuple(int(parts[c]) for c in
+                     ("generation", "time_bucket", "stream_group"))
+
+    end_ns = time.time_ns() // 1_000_000 * 1_000_000
+    ordered = sorted(paths, key=key)
+    for i, path in enumerate(ordered):
+        t = end_ns - (len(ordered) - 1 - i) * 1_000_000
+        os.utime(path, ns=(t, t))
 
 
 def generate_to_dir(spec: GenSpec, base_dir: str, stream_group_of=None, force: bool = False) -> dict:

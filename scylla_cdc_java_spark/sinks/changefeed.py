@@ -113,19 +113,13 @@ def _align(df: DataFrame, other: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def changes_between(sink, from_version: int,
-                    to_version: int | None = None,
-                    prune: bool = True) -> DataFrame:
+                    to_version: int | None = None) -> DataFrame:
     """Row-level net change feed ``from_version -> to_version`` (None =
     current). Returns ``(pk..., value cols..., collection cols...,
     _change_type)`` where ``_change_type`` ∈ {insert, delete,
     update_preimage, update_postimage}: inserts/post-images carry the
     new snapshot's values, deletes/pre-images the old snapshot's.
-    Unchanged rows never appear, and only changed buckets are read.
-
-    ``prune=False`` diffs EVERY bucket (O(table) on both sides) — a
-    measurement control for tools/changefeed_bench.py proving the
-    fingerprint prune changes cost, never the answer; production
-    callers leave it True."""
+    Unchanged rows never appear, and only changed buckets are read."""
     root_from = sink._load_root(from_version)
     root_to = sink._load_root(to_version)
     if root_from["version"] > root_to["version"]:
@@ -143,11 +137,6 @@ def changes_between(sink, from_version: int,
 
     if root_from["version"] == root_to["version"]:
         bsel: list[int] = []
-    elif not prune:
-        bsel = sorted(
-            {int(b) for b in root_from["bucket_index"]}
-            | {int(b) for b in root_to["bucket_index"]}
-        )
     else:
         bsel = _diff_buckets(root_from, root_to)
     before = sink.read(version=root_from["version"], buckets=bsel)

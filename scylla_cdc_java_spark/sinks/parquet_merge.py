@@ -188,8 +188,6 @@ class ParquetMergeSink:
         index_fold_deltas: int = DEFAULT_FOLD_DELTAS,
         parquet_block_bytes: int | None = None,
         bloom_columns: list[str] | None = None,
-        bloom_bits: int = DEFAULT_BLOOM_BITS,
-        bloom_hashes: int = DEFAULT_BLOOM_HASHES,
         minor_compact_ratio: float = 0.5,
     ):
         self.spark = spark
@@ -248,12 +246,11 @@ class ParquetMergeSink:
         # sort order. None = inherit the table's persisted config
         # (external maintainers keep capturing what the writer
         # enabled); [] = explicitly disable and strip the persisted
-        # config at the next commit.
+        # config at the next commit. New configs use the default
+        # bloom.DEFAULT_BLOOM_BITS/HASHES; a persisted m/k is honoured.
         self.bloom_columns = (
             list(bloom_columns) if bloom_columns is not None else None
         )
-        self.bloom_bits = int(bloom_bits)
-        self.bloom_hashes = int(bloom_hashes)
         # LSM-style compaction policy (see compact(minor=True)): when a
         # bucket crosses compact_threshold, the piggyback folds ONLY
         # its delta segments (leaving the base untouched) if their
@@ -323,7 +320,10 @@ class ParquetMergeSink:
         commit that landed since they planned is absorbed by building
         against ``cur``, never clobbered (the old blind ``os.replace``
         lost whichever commit swapped first). ``build`` returns None to
-        abort (nothing left to commit). ``CommitLockBroken`` propagates
+        abort (nothing left to commit); the new root's ``version`` is
+        stamped here, ``cur["version"] + 1``, never by ``build``. A data
+        commit names its per-bucket manifests with that same number
+        (``_next_entry``). ``CommitLockBroken`` propagates
         from release: the commit landed, but a breaker judged us stale
         mid-section, so the result may have raced — callers must treat
         the table as needing re-verification."""
@@ -331,6 +331,7 @@ class ParquetMergeSink:
             cur = self._load_root()
             new = build(cur)
             if new is not None:
+                new["version"] = cur["version"] + 1
                 self._commit(new, snapshot=snapshot, op=op)
             return new
 
@@ -470,6 +471,52 @@ class ParquetMergeSink:
             "tomb_rows": int(st.get("tomb_rows") or 0),
         }
 
+    def _next_entry(self, b: str, cur_entry: dict | None, v: int, *,
+                    drop_segs=(), drop_tombs=(), drop_tomb_rows: int = 0,
+                    seg: str | None = None, seg_stats: dict | None = None,
+                    tomb: str | None = None, tomb_rows: int = 0
+                    ) -> dict | None:
+        """The one per-bucket rebase of every data commit. Bucket
+        ``b``'s next state is its current one (``cur_entry``; None =
+        empty) minus the segments and sidecars a compaction replaced
+        (``drop_*``, with their ``drop_tomb_rows``), plus the new
+        segment ``seg`` (stats ``seg_stats``) and the new sidecar
+        ``tomb`` (``tomb_rows`` rows). A segment that replaces others
+        goes first, under the deltas appended since its read; a merge
+        delta is appended last. Segment stats are kept for live
+        segments only (keyed by path, so a compaction drops exactly the
+        replaced segments' entries). Writes the state as the bucket's
+        manifest for version ``v`` and returns its root entry, or None
+        when nothing is left. Merge appends, compaction drops its read
+        set, rebucket starts from ``cur_entry=None``."""
+        st = self._bucket_state(cur_entry) if cur_entry is not None else {}
+        segs = [s for s in st.get("segs", []) if s not in drop_segs]
+        if seg is not None:
+            segs = [seg] + segs if drop_segs else segs + [seg]
+        tomb_segs = [t for t in st.get("tomb_segs", []) if t not in drop_tombs]
+        if tomb is not None:
+            tomb_segs.append(tomb)
+        if not segs and not tomb_segs:
+            return None
+        stats = {s: x for s, x in (st.get("stats") or {}).items()
+                 if s in segs}
+        if seg_stats:
+            stats[seg] = seg_stats
+        rows = max(0, int(st.get("tomb_rows") or 0) - drop_tomb_rows)
+        return self._write_bucket_meta(b, {
+            "segs": segs, "tomb_segs": tomb_segs,
+            "tomb_rows": rows + tomb_rows, "stats": stats}, v)
+
+    def _read_set(self, index) -> dict[str, tuple[frozenset, frozenset]]:
+        """``{bucket: (segs, tomb_segs)}`` of a bucket index — the
+        exact state a whole-table rewrite planned against."""
+        out = {}
+        for b, e in index.items():
+            st = self._bucket_state(e)
+            out[str(b)] = (frozenset(st.get("segs", ())),
+                           frozenset(st.get("tomb_segs", ())))
+        return out
+
     def _resolve(self, root: dict, buckets=None) -> dict:
         """Flat manifest view ``{buckets, tomb_segs, ...}`` resolved for
         the SELECTED buckets only — per-window read/write paths open
@@ -542,7 +589,6 @@ class ParquetMergeSink:
                 "shards": {shard: ck},
                 "done": bool(ck.get("done")),
             }
-            new["version"] = cur["version"] + 1
             return new
         self._commit_under_lock(_build, snapshot=False,
                                 op="migrate_checkpoint")
@@ -1193,7 +1239,7 @@ class ParquetMergeSink:
             if not self.bloom_columns:
                 return None
             return {"columns": list(dict.fromkeys(self.bloom_columns)),
-                    "m": self.bloom_bits, "k": self.bloom_hashes}
+                    "m": DEFAULT_BLOOM_BITS, "k": DEFAULT_BLOOM_HASHES}
         cfg = root.get("bloom")
         if (isinstance(cfg, dict) and cfg.get("columns")
                 and isinstance(cfg.get("m"), int)
@@ -1202,9 +1248,8 @@ class ParquetMergeSink:
         return None
 
     def _persist_bloom_cfg(self, new_root: dict, cfg: dict | None) -> None:
-        """Carry/strip the bloom config on a freshly-built root (merge
-        builds its root explicitly; compact/rebucket copy ``cur`` — in
-        both cases the sink's explicit [] must strip)."""
+        """Carry/strip the bloom config on a root a data commit copied
+        from ``cur``: the sink's explicit [] must strip it."""
         if cfg:
             new_root["bloom"] = {"columns": list(cfg["columns"]),
                                  "m": int(cfg["m"]), "k": int(cfg["k"])}
@@ -1262,16 +1307,41 @@ class ParquetMergeSink:
         except Exception:
             return {}
 
-    @staticmethod
-    def _graft_blooms(zone_by_bucket: dict, blooms: dict) -> None:
-        """Attach staged blooms under the reserved BLOOM_KEY of each
-        bucket's per-segment stats dict (in place) — the same dict the
-        manifest rebase paths already carry for zone maps, so blooms
-        survive merge appends, compact replaces, and rebucket rebuilds
-        with no further plumbing."""
+    def _segment_stats(self, rel: str, written: dict[str, str],
+                       value_cols: list[str], root: dict) -> dict[str, dict]:
+        """``{bucket: stats}`` of the segments a stage just wrote under
+        the table-relative dir ``rel`` (``written``: bucket -> segment
+        dir, as ``_listed`` returns it): zone maps over pk +
+        ``value_cols`` from the parquet footers (O(touched files)
+        driver metadata), plus — under the reserved BLOOM_KEY — the
+        blooms of ``root``'s bloom config, one distributed aggregation
+        over the tree. ``_next_entry`` keeps this dict per segment, so
+        blooms survive merge appends, compact replaces and rebucket
+        rebuilds with no further plumbing."""
+        if not written:
+            return {}
+        cols = list(self.table.primary_key) + list(value_cols)
+        stats = {b: _seg_zone_stats(os.path.join(self.path, p), cols)
+                 for b, p in written.items()}
+        blooms = self._stage_bloom_stats(
+            os.path.join(self.path, rel), self._bloom_cfg(root))
         for b, percol in blooms.items():
             if percol:
-                zone_by_bucket.setdefault(b, {})[BLOOM_KEY] = percol
+                stats.setdefault(b, {})[BLOOM_KEY] = percol
+        return stats
+
+    def _listed(self, rel: str) -> dict[str, str]:
+        """``{bucket: table-relative dir}`` of the ``__bucket=`` dirs a
+        bucket-partitioned stage wrote under the table-relative dir
+        ``rel`` (empty if it wrote nothing)."""
+        full = os.path.join(self.path, rel)
+        if not os.path.isdir(full):
+            return {}
+        return {
+            d.split("=", 1)[1]: os.path.join(rel, d)
+            for d in sorted(os.listdir(full))
+            if d.startswith(BUCKET_COL + "=")
+        }
 
     @staticmethod
     def _zone_bucket_excluded(st: dict, segs: list[str], conj) -> bool:
@@ -1445,16 +1515,13 @@ class ParquetMergeSink:
     # write path: append one delta segment + tombstone ledger entries
     # ------------------------------------------------------------------
     def merge(self, fold: FoldResult, checkpoint: dict | None = None,
-              touched_src: DataFrame | None = None,
               shard: str | None = None) -> dict:
         """Apply one folded batch by APPENDING a delta segment; returns
         commit stats (incl. ``delta_rows`` from parquet footers — no
-        extra Spark job). ``touched_src`` is accepted for API
-        compatibility and unused: merge-on-read needs no touched-bucket
-        scan because the write itself partitions by bucket. ``shard``
-        scopes the checkpoint to one sharded consumer (multi-writer
-        tables): only this shard's lineage is replaced; concurrent
-        shards' entries survive via the commit-time rebase.
+        extra Spark job). ``shard`` scopes the checkpoint to one sharded
+        consumer (multi-writer tables): only this shard's lineage is
+        replaced; concurrent shards' entries survive via the commit-time
+        rebase.
 
         If an online ``rebucket()`` lands inside this merge's
         stage->commit window, the commit fences (the staged files are
@@ -1524,7 +1591,6 @@ class ParquetMergeSink:
         version = root["version"] + 1
         tok = uuid.uuid4().hex[:8]
         rel_rows = os.path.join("data", f"v{version}-{tok}", "rows")
-        staging = os.path.join(self.path, rel_rows)
 
         # ---- tombstone sidecar (ops 4-8): per-bucket parquet, same
         # Spark topology as the rows — NEVER collected to the driver
@@ -1580,7 +1646,13 @@ class ParquetMergeSink:
         # bench, where sequential execution paid it in full). FIFO
         # scheduling keeps the delta job's priority; both writes land
         # in separate staging dirs, and any failure propagates via
-        # .result() before anything is committed.
+        # .result() before anything is committed. Each job description
+        # is set from its own submitting thread and stays with that
+        # thread's jobs only under PySpark's pinned-thread mode (one JVM
+        # thread per Python thread, the default since Spark 3.2); with
+        # PYSPARK_PIN_THREAD=false both threads share one JVM thread
+        # and the two descriptions race (labels only: the writes, their
+        # dirs and the commit are unaffected).
         def _write_delta() -> None:
             self.spark.sparkContext.setJobDescription("merge: delta stage")
             (
@@ -1588,7 +1660,7 @@ class ParquetMergeSink:
                 .repartition(F.col(BUCKET_COL))
                 .write.mode("overwrite")
                 .partitionBy(BUCKET_COL)
-                .parquet(staging)
+                .parquet(os.path.join(self.path, rel_rows))
             )
 
         def _write_tombs() -> None:
@@ -1607,16 +1679,8 @@ class ParquetMergeSink:
                 f.result()
         self.spark.sparkContext.setJobDescription(None)
 
-        def _staged(stage_dir: str, rel: str) -> dict[str, str]:
-            out = {}
-            if os.path.exists(stage_dir):
-                for d in sorted(os.listdir(stage_dir)):
-                    if d.startswith(BUCKET_COL + "="):
-                        out[d.split("=", 1)[1]] = os.path.join(rel, d)
-            return out
-
-        row_new = _staged(staging, rel_rows)
-        tomb_new = _staged(tomb_staging, rel_tombs)
+        row_new = self._listed(rel_rows)
+        tomb_new = self._listed(rel_tombs)
         t_meta = time.time()
 
         # footer row counts of the just-staged files — outside the lock
@@ -1628,20 +1692,9 @@ class ParquetMergeSink:
             b: _parquet_rows(os.path.join(self.path, p))
             for b, p in tomb_new.items()
         }
-        # zone-map stats of the staged delta segments (same footers,
-        # same moment): scan() prunes buckets on value-column predicates
-        # with these; capture cost is O(touched files) driver metadata
-        zone_cols = pk + value_cols
-        delta_zone = {
-            b: _seg_zone_stats(os.path.join(self.path, p), zone_cols)
-            for b, p in row_new.items()
-        }
-        # bloom-filter capture for equality skipping (sinks/bloom.py):
-        # one distributed bit_or aggregation over the staged delta —
-        # O(window) work, riding the same per-segment stats entries
-        bloom_cfg = self._bloom_cfg(root)
-        self._graft_blooms(
-            delta_zone, self._stage_bloom_stats(staging, bloom_cfg))
+        # zone maps + blooms of the staged delta segments: scan()
+        # prunes buckets on value-column predicates with these
+        delta_stats = self._segment_stats(rel_rows, row_new, value_cols, root)
         touched = sorted(int(b) for b in row_new)
 
         # checkpoint state transported via the sidecar: read the
@@ -1676,58 +1729,32 @@ class ParquetMergeSink:
             v = cur["version"] + 1
             new_index = copy_index(cur["bucket_index"])
             for b in sorted(set(row_new) | set(tomb_new)):
-                prev = (
-                    self._bucket_state(new_index[b]) if b in new_index
-                    else {"segs": [], "tomb_segs": [], "tomb_rows": 0}
-                )
-                st = {
-                    "segs": list(prev.get("segs", [])),
-                    "tomb_segs": list(prev.get("tomb_segs", [])),
-                    "tomb_rows": int(prev.get("tomb_rows") or 0),
-                }
-                zone = dict(prev.get("stats") or {})
-                if b in row_new:
-                    st["segs"].append(row_new[b])
-                    zs = delta_zone.get(b)
-                    if zs:
-                        zone[row_new[b]] = zs
-                if b in tomb_new:
-                    st["tomb_segs"].append(tomb_new[b])
-                    st["tomb_rows"] += tomb_rows_new[b]
-                # keyed by segment path so a compaction rebase can drop
-                # exactly the replaced segments' entries; kept only for
-                # live segments (write-once files: entries never go stale)
-                st["stats"] = {k: s for k, s in zone.items()
-                               if k in st["segs"]}
-                new_index[b] = self._write_bucket_meta(b, st, v)
-            out_root = {
-                "version": v,
-                "bucket_index": new_index,
-                "value_columns": list(dict.fromkeys(
+                new_index[b] = self._next_entry(
+                    b, new_index.get(b), v,
+                    seg=row_new.get(b), seg_stats=delta_stats.get(b),
+                    tomb=tomb_new.get(b), tomb_rows=tomb_rows_new.get(b, 0))
+            # table state this commit does not own (sort order, bloom
+            # config, ...) rides over from cur like every data commit
+            out_root = {k: x for k, x in cur.items() if k != "bucket_index"}
+            out_root.update(
+                bucket_index=new_index,
+                value_columns=list(dict.fromkeys(
                     cur["value_columns"] + value_cols)),
-                "collection_columns": list(dict.fromkeys(
+                collection_columns=list(dict.fromkeys(
                     cur["collection_columns"] + coll_cols)),
-                "checkpoint": self._merge_shard_checkpoint(
+                checkpoint=self._merge_shard_checkpoint(
                     cur, checkpoint, shard),
                 # table identity for external maintenance processes
                 # (ParquetMergeSink.for_existing): bucket routing MUST
                 # match the writer's or compaction misplaces rows
-                "table": {
+                table={
                     "name": tbl.name,
                     "partition_key": list(tbl.partition_key),
                     "clustering_key": list(tbl.clustering_key),
                 },
-                "num_buckets": nb,
-                # the merge root is built explicitly (not copied from
-                # cur), so persisted sort-order evolution must be
-                # carried or the first merge after a sorted compaction
-                # would silently reset the table's clustering
-                **({"sort_order": cur["sort_order"]}
-                   if cur.get("sort_order") else {}),
-            }
-            # bloom config is table state like sort_order: the sink's
-            # explicit setting wins (incl. [] = strip), else carry the
-            # config persisted in the root being rebased onto
+                num_buckets=nb,
+            )
+            # the sink's explicit bloom setting wins (incl. [] = strip)
             self._persist_bloom_cfg(out_root, self._bloom_cfg(cur))
             return out_root
 
@@ -2004,15 +2031,8 @@ class ParquetMergeSink:
         )
         if self.parquet_block_bytes:
             w = w.option("parquet.block.size", self.parquet_block_bytes)
-        staging = os.path.join(self.path, rel_out)
-        w.partitionBy(BUCKET_COL).parquet(staging)
-        if not os.path.exists(staging):
-            return {}
-        return {
-            d.split("=", 1)[1]: os.path.join(rel_out, d)
-            for d in sorted(os.listdir(staging))
-            if d.startswith(BUCKET_COL + "=")
-        }
+        w.partitionBy(BUCKET_COL).parquet(os.path.join(self.path, rel_out))
+        return self._listed(rel_out)
 
     # ------------------------------------------------------------------
     def compact(self, buckets: list[int] | None = None,
@@ -2104,8 +2124,7 @@ class ParquetMergeSink:
             sub["_tomb_rows"] = {b: 0 for b in sub["_tomb_rows"]}
             # narrow the COMMIT set to the folded buckets: rewriting an
             # untouched bucket's manifest would churn its fingerprint
-            # (phantom change for every incremental consumer) and
-            # over-size the staging repartition below
+            # (phantom change for every incremental consumer)
             csel = set(sub["buckets"])
         if not sub["buckets"] and not (
                 not minor and any(sub["tomb_segs"].values())):
@@ -2147,17 +2166,11 @@ class ParquetMergeSink:
         tok = uuid.uuid4().hex[:8]
         rel_out = os.path.join("data", f"v{version}-{tok}",
                                "rows" if minor else "base")
-        staging = os.path.join(self.path, rel_out)
         written = self._write_bases(resolved, rel_out, order)
-        zone_cols = list(self.table.primary_key) + root["value_columns"]
-        base_zone = {
-            b: _seg_zone_stats(os.path.join(self.path, p), zone_cols)
-            for b, p in written.items()
-        }
-        # fresh bases get fresh blooms (the resolved rows are exactly
+        # fresh bases get fresh stats (the resolved rows are exactly
         # what a scan can observe); post-read deltas keep their own
-        self._graft_blooms(base_zone, self._stage_bloom_stats(
-            staging, self._bloom_cfg(root)))
+        base_stats = self._segment_stats(
+            rel_out, written, root["value_columns"], root)
 
         # ---- commit: rebase against the CURRENT root under the lock.
         # Per bucket, the read set is replaced by the new base; segments
@@ -2175,46 +2188,27 @@ class ParquetMergeSink:
             updated.clear()
             for b in sorted(csel):
                 cur_e = new_index.get(b)
-                cur_st = (
-                    self._bucket_state(cur_e) if cur_e is not None
-                    else {"segs": [], "tomb_segs": [], "tomb_rows": 0}
-                )
-                cur_segs = list(cur_st.get("segs", []))
-                cur_tsegs = list(cur_st.get("tomb_segs", []))
+                cur_st = self._bucket_state(cur_e) if cur_e is not None else {}
                 r = read_segs.get(b, set())
                 t = read_tombs.get(b, set())
-                if not (r <= set(cur_segs) and t <= set(cur_tsegs)):
+                if not (r <= set(cur_st.get("segs", ()))
+                        and t <= set(cur_st.get("tomb_segs", ()))):
                     continue  # superseded by a concurrent compaction
-                segs = ([written[b]] if b in written else []) + [
-                    s for s in cur_segs if s not in r
-                ]
-                tomb_segs = [s for s in cur_tsegs if s not in t]
-                cur_tr = (
-                    self._entry_counts(cur_e)[2] if cur_e is not None else 0
-                )
-                tomb_rows = max(0, cur_tr - int(read_tomb_rows.get(b) or 0))
-                if not segs and not tomb_segs:
+                e = self._next_entry(
+                    b, cur_e, v, drop_segs=r, drop_tombs=t,
+                    drop_tomb_rows=int(read_tomb_rows.get(b) or 0),
+                    seg=written.get(b), seg_stats=base_stats.get(b))
+                if e is not None:
+                    new_index[b] = e
+                elif cur_e is not None:
                     # fully emptied by resolution and nothing newer
-                    if cur_e is not None:
-                        new_index.pop(b, None)
-                        updated.append(b)
+                    new_index.pop(b, None)
+                else:
                     continue
-                # zone maps: the new base's freshly-captured stats plus
-                # the carried entries of post-read deltas that survive
-                # as segments over it
-                prev_zone = cur_st.get("stats") or {}
-                zone = {s: prev_zone[s] for s in segs if s in prev_zone}
-                if b in written and base_zone.get(b):
-                    zone[written[b]] = base_zone[b]
-                new_index[b] = self._write_bucket_meta(
-                    b, {"segs": segs, "tomb_segs": tomb_segs,
-                        "tomb_rows": tomb_rows, "stats": zone}, v,
-                )
                 updated.append(b)
             if not updated:
                 return None  # every bucket superseded — nothing to commit
             new_root = {k: x for k, x in cur.items() if k != "bucket_index"}
-            new_root["version"] = v
             new_root["bucket_index"] = new_index
             if sort_by is not None:
                 # sort-order evolution: persist so later compactions /
@@ -2281,17 +2275,11 @@ class ParquetMergeSink:
             # every bucket's (segs, sidecars) against the commit-time
             # root — stricter than compact's subset rebase because the
             # rewrite is total (a missed concurrent delta would vanish)
-            read_index = {
-                str(b): (frozenset(st.get("segs", ())),
-                         frozenset(st.get("tomb_segs", ())))
-                for b, st in ((b, self._bucket_state(e))
-                              for b, e in root["bucket_index"].items())
-            }
+            read_index = self._read_set(root["bucket_index"])
             sub = self._resolve(root)
             version = root["version"] + 1
             tok = uuid.uuid4().hex[:8]
             rel_out = os.path.join("data", f"v{version}-{tok}", "base")
-            staging = os.path.join(self.path, rel_out)
             written: dict[str, str] = {}
             if sub["buckets"] or any(sub["tomb_segs"].values()):
                 resolved = self._read_physical_resolved(
@@ -2305,34 +2293,18 @@ class ParquetMergeSink:
                 # bucket above AQE's advisory partition size
                 written = self._write_bases(
                     resolved, rel_out, root.get("sort_order") or [], new_nb)
-            reb_zone_cols = (list(self.table.primary_key)
-                             + root["value_columns"])
-            reb_zone = {
-                b: _seg_zone_stats(os.path.join(self.path, p),
-                                   reb_zone_cols)
-                for b, p in written.items()
-            }
-            self._graft_blooms(reb_zone, self._stage_bloom_stats(
-                staging, self._bloom_cfg(root)))
+            reb_stats = self._segment_stats(
+                rel_out, written, root["value_columns"], root)
 
             def _build(cur: dict) -> dict | None:
                 if int(cur.get("num_buckets", old_nb)) != old_nb:
                     return None  # another rebucket won; replan
-                cur_index = {
-                    str(b): (frozenset(st.get("segs", ())),
-                             frozenset(st.get("tomb_segs", ())))
-                    for b, st in ((b, self._bucket_state(e))
-                                  for b, e in cur["bucket_index"].items())
-                }
-                if cur_index != read_index:
+                if self._read_set(cur["bucket_index"]) != read_index:
                     return None  # a data commit landed since planning
                 v = cur["version"] + 1
                 new_index = {
-                    b: self._write_bucket_meta(
-                        b, {"segs": [rel], "tomb_segs": [],
-                            "tomb_rows": 0,
-                            "stats": ({rel: reb_zone[b]}
-                                      if reb_zone.get(b) else {})}, v)
+                    b: self._next_entry(b, None, v, seg=rel,
+                                        seg_stats=reb_stats.get(b))
                     for b, rel in written.items()
                 }
                 # plain dict (not derived from cur's sharded view):
@@ -2342,7 +2314,6 @@ class ParquetMergeSink:
                 new_root = {
                     k: x for k, x in cur.items() if k != "bucket_index"
                 }
-                new_root["version"] = v
                 new_root["bucket_index"] = new_index
                 new_root["num_buckets"] = new_nb
                 self._persist_bloom_cfg(new_root, self._bloom_cfg(cur))
@@ -2379,12 +2350,7 @@ class ParquetMergeSink:
         snapshot's segments must still be retained (vacuum)."""
         snap = self._load_root(version=version)
 
-        def _build(cur: dict) -> dict:
-            m = dict(snap)
-            m["version"] = cur["version"] + 1
-            return m
-
-        m = self._commit_under_lock(_build, op="rollback")
+        m = self._commit_under_lock(lambda cur: dict(snap), op="rollback")
         # the restored snapshot may predate a rebucket: follow its
         # routing so this instance's next stage matches what it commits
         self.num_buckets = int(m.get("num_buckets", self.num_buckets))
@@ -2400,11 +2366,8 @@ class ParquetMergeSink:
         immutable snapshot is written (data is unchanged; a long-running
         idle tail would otherwise grow one snapshot file per poll)."""
         def _build(cur: dict) -> dict:
-            m = dict(cur)
-            m["version"] = cur["version"] + 1
-            m["checkpoint"] = self._merge_shard_checkpoint(
-                cur, checkpoint, shard)
-            return m
+            return {**cur, "checkpoint": self._merge_shard_checkpoint(
+                cur, checkpoint, shard)}
 
         m = self._commit_under_lock(_build, snapshot=False,
                                     op="checkpoint")

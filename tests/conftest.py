@@ -5,6 +5,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# Heap cap of every test JVM: the session's and those of the daemons the
+# multi-process tests start (they inherit this environment). get_spark's
+# 16g default lets the session JVM alone grow past 7 GB over the suite,
+# which a 16 GB host running those daemons beside it cannot hold.
+os.environ.setdefault("SPARK_DRIVER_MEM", "3g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -12,12 +12,15 @@ code paths under real merges.
 
 import json
 import os
+import sys
 
 import pytest
 
 from scylla_cdc_java_spark import Engine, GenSpec, generate_world, write_world
 from scylla_cdc_java_spark.model import EngineConfig
 from scylla_cdc_java_spark.oracle import final_state, replay
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SPEC = GenSpec(seed=77, n_events=1500, n_repos=40, paths_per_repo=6,
                n_generations=2, streams_per_generation=4,
@@ -91,3 +94,17 @@ def test_high_bucket_replay_crash_resume_oracle_exact(spark, tmp_root):
     eng2.sink.reader_lease_s = 0
     eng2.sink.vacuum()
     assert _rows(eng2.sink) == want
+
+
+def test_meta_scaling_tool_runs_the_real_rebase():
+    """``tools/meta_scaling.py`` times the sink's own per-bucket rebase
+    (``_next_entry``) with no Spark: a tiny run completes and its final
+    root counts every segment it appended (8 distinct buckets, one
+    segment each)."""
+    sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
+    import meta_scaling
+
+    out = meta_scaling.run(num_buckets=8, windows=4, touched=2)
+    assert out["total_segments_final"] == 8
+    assert out["root_manifest_bytes_final"] > 0
+    assert all(v >= 0 for v in out["hier_commit_ms"].values())

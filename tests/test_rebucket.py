@@ -426,8 +426,7 @@ def test_external_rebucketer_under_live_stack(spark, tmp_root):
         real_attempt = eng.sink._merge_attempt
         real_merge = eng.sink.merge
 
-        def merge_observed(fold, checkpoint=None, touched_src=None,
-                           shard=None):
+        def merge_observed(fold, checkpoint=None, shard=None):
             # merge() with the retry made observable: the test must
             # SEE the cross-process fence fire, not just converge
             try:

@@ -12,11 +12,11 @@ object under test is the commit critical section itself (the real
 fleet's commits are seconds apart; here they are back-to-back, so the
 probe is a WORST-CASE upper bound on contention, not a simulation).
 
-Each worker iteration reproduces exactly what ``merge()`` does around
-the lock (parquet_merge.py:1114-1155): stage nothing (data files are
-outside the lock by design), then under the lock rebase — read CURRENT
-root, append one synthetic segment to ``touched`` buckets via
-``_write_bucket_meta``, merge this shard's checkpoint — and swap. Time
+Each worker iteration reproduces what ``merge()`` does around the
+lock: stage nothing (data files are outside the lock by design), then
+under the lock rebase — read CURRENT root, append one synthetic segment
+to ``touched`` buckets via ``_next_entry`` (the sink's per-bucket
+rebase), merge this shard's checkpoint — and swap. Time
 is split into lock WAIT (acquire) and CRITICAL SECTION (load root →
 build → commit → release), the two quantities that bound fleet-wide
 commit throughput: ``aggregate commits/s <= 1 / cs_s``.
@@ -71,17 +71,8 @@ def _worker(argv: list[str]) -> None:
             new_index = copy_index(cur["bucket_index"])
             for j in range(touched):
                 b = str((rng * 7919 + i * 17 + j * 13) % sink.num_buckets)
-                prev = (
-                    sink._bucket_state(new_index[b]) if b in new_index
-                    else {"segs": [], "tomb_segs": [], "tomb_rows": 0}
-                )
-                st = {
-                    "segs": list(prev.get("segs", []))
-                    + [f"data/v{v}/rows/__bucket={b}"],
-                    "tomb_segs": list(prev.get("tomb_segs", [])),
-                    "tomb_rows": int(prev.get("tomb_rows") or 0),
-                }
-                new_index[b] = sink._write_bucket_meta(b, st, v)
+                new_index[b] = sink._next_entry(
+                    b, new_index.get(b), v, seg=f"data/v{v}/rows/__bucket={b}")
             root = dict(cur)
             root["version"] = v
             root["bucket_index"] = new_index
@@ -120,7 +111,6 @@ def run_level(num_buckets: int, writers: int, duration_s: float,
               snapshot_retention: int = 1) -> dict:
     sys.path.insert(0, REPO)
     from scylla_cdc_java_spark.sinks.parquet_merge import ParquetMergeSink
-    from scylla_cdc_java_spark.sinks.bucket_index import copy_index
 
     path = tempfile.mkdtemp(prefix=f"cc_{num_buckets}b_{writers}w_")
     try:
@@ -132,9 +122,8 @@ def run_level(num_buckets: int, writers: int, duration_s: float,
         root = sink._load_root()
         idx = {}
         for b in range(num_buckets):
-            idx[str(b)] = sink._write_bucket_meta(
-                str(b), {"segs": [f"data/v1/rows/__bucket={b}"],
-                         "tomb_segs": [], "tomb_rows": 0}, 1)
+            idx[str(b)] = sink._next_entry(
+                str(b), None, 1, seg=f"data/v1/rows/__bucket={b}")
         root.update(version=1, bucket_index=idx, num_buckets=num_buckets,
                     checkpoint={"shards": {}, "done": False})
         sink._commit(root)

@@ -9,8 +9,8 @@ manifest files, the Iceberg manifest-list shape) claims O(touched) per
 commit. This probe measures exactly that, at a scale a local Spark
 world cannot reach: NUM_BUCKETS buckets x WINDOWS windows, each window
 touching TOUCHED buckets, driving the sink's real metadata code
-(``_bucket_state`` / ``_write_bucket_meta`` / ``_commit``) with
-synthetic segment paths — no Spark jobs, because the object under test
+(``_next_entry``, the per-bucket rebase every data commit uses, then
+``_commit``) with synthetic segment paths — no Spark jobs, because the object under test
 is the driver metadata layer itself.
 
 For contrast it also times what the round-3 shape would have done at
@@ -59,17 +59,9 @@ def run(num_buckets: int = NUM_BUCKETS, windows: int = WINDOWS,
             # deterministic rotating bucket subset
             for i in range(touched):
                 b = str((w * 17 + i * 13) % num_buckets)
-                prev = (
-                    sink._bucket_state(new_index[b]) if b in new_index
-                    else {"segs": [], "tomb_segs": [], "tomb_rows": 0}
-                )
-                st = {
-                    "segs": list(prev.get("segs", []))
-                    + [f"data/v{version}/rows/__bucket={b}"],
-                    "tomb_segs": list(prev.get("tomb_segs", [])),
-                    "tomb_rows": int(prev.get("tomb_rows") or 0),
-                }
-                new_index[b] = sink._write_bucket_meta(b, st, version)
+                new_index[b] = sink._next_entry(
+                    b, new_index.get(b), version,
+                    seg=f"data/v{version}/rows/__bucket={b}")
             root = {
                 "version": version,
                 "bucket_index": new_index,
